@@ -1062,21 +1062,14 @@ P3_SQL = (
 def p4_p5_clean_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4+P5+J1+J3: dictionary-driven drop/rename through the cleaning
     planner (reference :99-270 collapsed to one Project)."""
-    dict_schema = (
-        "raw_data_column string, raw_data_column_name string, "
-        "equivalent_clean_data_name string, notes string"
-    )
-    d1 = spark.createDataFrame(
+    d1 = _dict_rows(
         [
             ("c1", "c_custkey", "customer_key", None),
             ("c2", "c_name", "customer_name", None),
             ("c3", "c_mktsegment", "THIS COLUMN IS NOT USED", None),
-        ],
-        dict_schema,
+        ]
     )
-    d2 = spark.createDataFrame(
-        [("c4", "c_acctbal", "account_balance", None)], dict_schema
-    )
+    d2 = _dict_rows([("c4", "c_acctbal", "account_balance", None)])
     cust = _t(spark, sf_dir, "customer")
     plan = build_clean_plan(cust.columns, d1, d2, prefer=1)
     return apply_clean_plan(cust, plan)
@@ -5499,6 +5492,14 @@ _DICT_SCHEMA = (
     "equivalent_clean_data_name string, notes string"
 )
 
+
+def _dict_rows(rows: list[tuple]) -> list[dict]:
+    """Inline dictionary rows (``_DICT_SCHEMA`` order) as the driver-side
+    rows ``build_clean_plan`` reads."""
+    names = [c.split()[0] for c in _DICT_SCHEMA.split(", ")]
+    return [dict(zip(names, r)) for r in rows]
+
+
 _LUNCH_RAW_SCHEMA = (
     "SCHOOL_NAME string, CLAIM_DATE string, DISTRICT_ID string, "
     "`PUBLIC` string, `SCHOOL TYPE` string, LUNCH_FREE string, LUNCH_RED string, "
@@ -5587,8 +5588,7 @@ def ref_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         derive_lunch,
     )
 
-    d1 = spark.createDataFrame(_LUNCH_DICT, _DICT_SCHEMA)
-    d2 = spark.createDataFrame(_BRKF_DICT, _DICT_SCHEMA)
+    d1, d2 = _dict_rows(_LUNCH_DICT), _dict_rows(_BRKF_DICT)
     lunch_raw = spark.createDataFrame(_LUNCH_ROWS, _LUNCH_RAW_SCHEMA)
     brkf_raw = spark.createDataFrame(_BRKF_ROWS, _BRKF_RAW_SCHEMA)
 
@@ -5714,8 +5714,7 @@ def ref_multistate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         derive_lunch,
     )
 
-    d1 = spark.createDataFrame(_LUNCH_DICT, _DICT_SCHEMA)
-    d2 = spark.createDataFrame(_BRKF_DICT, _DICT_SCHEMA)
+    d1, d2 = _dict_rows(_LUNCH_DICT), _dict_rows(_BRKF_DICT)
     outs = []
     for st, excl in (("WI", None), ("MN", "Beta High")):
         lunch_raw = spark.createDataFrame(_LUNCH_ROWS, _LUNCH_RAW_SCHEMA)

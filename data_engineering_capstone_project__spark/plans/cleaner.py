@@ -5,17 +5,23 @@ data-dictionary templates, decide which columns to drop (no clean name, or
 clean name marked NOT USED) and which to rename (only clean names mapped by
 exactly one raw name), then apply. The reference spends ~500 lines of WHILE
 loops and dynamic SQL on this (``shareOurStrengthSQLCodev4.sql:99-270`` ×3
-files); here the plan is computed with two broadcast joins over
-metadata-sized DataFrames, collected to the driver (a few hundred rows — the
-data itself is never collected), and applied as ONE select.
+files); here the dictionaries are read to the driver once (a few hundred
+rows — the data itself is never collected), the plan is pure Python, and it
+is applied as ONE select.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Mapping, Sequence
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+
+from data_engineering_capstone_project__spark.sources.io import read_tsv, tsv_header
+
+DICT_COLUMNS = ("raw_data_column_name", "equivalent_clean_data_name")
 
 
 @dataclass
@@ -26,25 +32,46 @@ class CleanPlan:
     drops: list[str] = field(default_factory=list)
     renames: dict[str, str] = field(default_factory=dict)  # raw -> clean
 
-    @property
-    def kept_unrenamed(self) -> list[str]:
-        return []
+
+def read_dictionaries(spark: SparkSession, paths: Iterable[str]) -> dict[str, list[Row]]:
+    """Every distinct dictionary TSV, as driver-side rows, in one collect
+    (its only Spark job: headers are read on the driver). Each file goes
+    through ``read_tsv``, so Spark's CSV semantics hold (an empty cell
+    reads as NULL)."""
+    paths = list(dict.fromkeys(paths))
+    out: dict[str, list[Row]] = {p: [] for p in paths}
+    if not paths:
+        return out
+    frames = [
+        read_tsv(spark, p, columns=tsv_header(p)).select(
+            F.lit(i).alias("_d"), *DICT_COLUMNS
+        )
+        for i, p in enumerate(paths)
+    ]
+    for r in reduce(DataFrame.unionAll, frames).collect():
+        out[paths[r["_d"]]].append(r)
+    return out
 
 
 def build_clean_plan(
-    columns: list[str],
-    dict1: DataFrame,
-    dict2: DataFrame,
+    columns: Sequence[str],
+    dict1: Iterable[Mapping | Row],
+    dict2: Iterable[Mapping | Row],
     prefer: int = 1,
     not_used_pattern: str = "%NOT USED%",
 ) -> CleanPlan:
-    """Compute the drop/rename plan for a file's columns.
+    """Compute the drop/rename plan for a file's columns. Pure Python, no
+    Spark job.
 
-    ``dict1``/``dict2`` carry (raw_data_column_name, equivalent_clean_data_name).
-    ``prefer`` selects which dictionary wins when both map a raw name — the
-    reference is asymmetric (file 1 prefers template 2 ``:100-101``, files
-    2–3 prefer template 1 ``:348-349``); we implement coalesce-with-priority
-    (the *intent* — the ``:102-103`` dead-branch bug is not replicated).
+    ``dict1``/``dict2`` are dictionary rows carrying
+    ``raw_data_column_name`` and ``equivalent_clean_data_name`` (``Row``s
+    from ``read_dictionaries`` or a collect). Each column name is LEFT
+    JOINed against both: a raw name listed twice in a dictionary yields
+    one candidate per d1×d2 match. ``prefer`` selects which dictionary
+    wins when both map a raw name — the reference is asymmetric (file 1
+    prefers template 2 ``:100-101``, files 2–3 prefer template 1
+    ``:348-349``); we implement coalesce-with-priority (the *intent* — the
+    ``:102-103`` dead-branch bug is not replicated).
 
     Rules (``:126-130`` drop, ``:172-191`` 1:1 rename):
     - clean name NULL or LIKE ``not_used_pattern`` → drop
@@ -52,31 +79,24 @@ def build_clean_plan(
       (those raw columns are *kept under their raw names* — the reference
       simply doesn't rename them).
     """
-    spark = dict1.sparkSession
-    cols_df = spark.createDataFrame([(c,) for c in columns], "name string")
-    d1 = dict1.select(
-        F.col("raw_data_column_name").alias("name"),
-        F.col("equivalent_clean_data_name").alias("clean1"),
-    )
-    d2 = dict2.select(
-        F.col("raw_data_column_name").alias("name"),
-        F.col("equivalent_clean_data_name").alias("clean2"),
-    )
-    first, second = ("clean1", "clean2") if prefer == 1 else ("clean2", "clean1")
-    lookup = (
-        cols_df.join(F.broadcast(d1), "name", "left")
-        .join(F.broadcast(d2), "name", "left")
-        .select("name", F.coalesce(F.col(first), F.col(second)).alias("clean"))
-    )
-    rows = lookup.collect()  # metadata-sized: one row per column name
 
+    def index(rows) -> dict[str, list[str | None]]:
+        m: dict[str, list[str | None]] = {}
+        for r in rows:
+            m.setdefault(r[DICT_COLUMNS[0]], []).append(r[DICT_COLUMNS[1]])
+        return m
+
+    m1, m2 = index(dict1), index(dict2)
     drops, candidates = [], []
-    for r in rows:
-        clean = r["clean"]
-        if clean is None or _like(clean, not_used_pattern):
-            drops.append(r["name"])
-        else:
-            candidates.append((r["name"], clean))
+    for name in columns:
+        for c1 in m1.get(name, [None]):
+            for c2 in m2.get(name, [None]):
+                first, second = (c1, c2) if prefer == 1 else (c2, c1)
+                clean = first if first is not None else second
+                if clean is None or _like(clean, not_used_pattern):
+                    drops.append(name)
+                else:
+                    candidates.append((name, clean))
     # 1:1 rule: a clean name used by more than one raw column is not renamed
     counts: dict[str, int] = {}
     for _, clean in candidates:
@@ -127,15 +147,16 @@ def apply_clean_plan(
     the output carries ONLY the renamed columns (+ row id) — columns that
     survived the drop but weren't 1:1-renamed are NOT carried forward.
     """
+    # SQL text, not Column objects: each F.col costs a py4j round trip of
+    # ~1.5 ms, which summed to seconds over a 65-state delivery's scans
     exprs = []
     for c in df.columns:
         if c == row_id_col:
-            exprs.append(F.col(c))
-            continue
-        if c in plan.drops:
-            continue
-        if c in plan.renames:
-            exprs.append(F.col(c).alias(plan.renames[c]))
-        elif not strict:
-            exprs.append(F.col(c))
-    return df.select(*exprs)
+            exprs.append(_quote(c))
+        elif c not in plan.drops and (c in plan.renames or not strict):
+            exprs.append(f"{_quote(c)} AS {_quote(plan.renames.get(c, c))}")
+    return df.selectExpr(*exprs)
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"

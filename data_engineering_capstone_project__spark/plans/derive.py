@@ -15,6 +15,8 @@ becomes ``.isNull()``.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -61,7 +63,12 @@ def d4_adp(meals: Column, operating_days: Column) -> Column:
 
 
 def d7_unique_id(school_id: Column, district_id: Column, state: str = "WI") -> Column:
-    """D7 (``:914-919``): CONCAT(state,'-','0',SchoolID,'-',DistrictID)."""
+    """D7 (``:914-919``): CONCAT(state,'-','0',SchoolID,'-',DistrictID).
+
+    ``derive_lunch`` keeps the reference's literal 'WI' prefix for every
+    state (parity with the single-state script and its oracles), so in a
+    multi-state delivery the key unique across states is
+    ``(state, Unique ID)``, not ``Unique ID`` alone."""
     return tsql_concat(state, "-", "0", school_id, "-", district_id)
 
 
@@ -177,10 +184,38 @@ def d14_school_type_std(school_type: Column) -> Column:
     return expr.otherwise(F.lit(None))
 
 
+_LINK_KEYS = ("school name", "claim date", "district id")
+
+# the cleaned columns each side's derive_* and assemble_final read (without
+# intent=True); a cleaned file lacking one cannot go through the flow
+DERIVE_INPUTS = {
+    "lunch": (
+        *_LINK_KEYS, "PUBLIC", "SCHOOL TYPE", "Lunch Meals-Free", "Lunch Meals-Reduced",
+        "Lunch Meals-Paid", "Operating Days-Lunch Only", "Enrollment-Free",
+        "Enrollment-Reduced", "Enrollment-Total", "CEP (Y/N)", "School ID",
+        "School Level-Original",
+    ),
+    "breakfast": (
+        *_LINK_KEYS, "TRADITIONAL_MODEL", "MID_MORNING_MODEL", "CLASSROOM_MODEL",
+        "REDUCED_PRICE_MODEL", "GRAB_N_GO_MODEL", "FREE_MODEL", "Breakfast Meals-Free",
+        "Breakfast Meals-Reduced", "Operating Days-Breakfast Only", "School Year",
+    ),
+}
+
+
+def missing_inputs(side: str, columns: Sequence[str]) -> list[str]:
+    """The ``DERIVE_INPUTS[side]`` names absent from ``columns``, matched
+    case-insensitively as Spark resolves them by default."""
+    have = {c.lower() for c in columns}
+    return [c for c in DERIVE_INPUTS[side] if c.lower() not in have]
+
+
 def derive_lunch(df: DataFrame, intent: bool = False) -> DataFrame:
     """EP3 lunch side (#join1): D1, D3, D4, D7, D8, D11–D14 in one pass.
 
     Expects the post-clean schema of FIXTURES.md A3 (NSLP lunch file).
+    ``Unique ID`` is 'WI'-prefixed whatever the state (see
+    ``d7_unique_id``).
 
     ``intent=True`` additionally honors the reference's spec-comment-only
     D12 fallback (``:977-980``): when a ``Lunch Meals-Free and Reduced``
@@ -253,17 +288,27 @@ def derive_breakfast(df: DataFrame, intent: bool = False) -> DataFrame:
     )
 
 
-def assemble_final(lunch: DataFrame, breakfast: DataFrame) -> DataFrame:
+def assemble_final(
+    lunch: DataFrame, breakfast: DataFrame, by: Sequence[str] = ()
+) -> DataFrame:
     """EP3 final assembly (``:1079-1089``): record-linkage join on
     (school name, claim date, padded district id) + DISTINCT — the
-    reference's "64 column" wide table in one join instead of six."""
+    reference's "64 column" wide table in one join instead of six.
+
+    ``by`` adds exact keys present on both sides (``state`` for a
+    multi-state delivery); the breakfast side's copy of each is dropped."""
     b = breakfast
-    for c in ("school name", "claim date", "district id"):
+    for c in (*_LINK_KEYS, *by):
         b = b.withColumnRenamed(c, f"b_{c}")
-    return linkage_join(
+    out = linkage_join(
         lunch,
         b,
-        exact_keys=[("school name", "b_school name"), ("claim date", "b_claim date")],
+        exact_keys=[
+            ("school name", "b_school name"),
+            ("claim date", "b_claim date"),
+            *[(k, f"b_{k}") for k in by],
+        ],
         padded_keys=[("district id", "b_district id")],
         distinct=True,
     )
+    return out.drop(*[f"b_{k}" for k in by]) if by else out

@@ -10,9 +10,10 @@ file). This module is that product on Spark: point it at the same files.
         --dict1 template1.tsv --dict2 template2.tsv \
         --out /path/final_parquet [--golden golden.parquet]
 
-Scale posture: dictionaries are broadcast; the raw files stream through one
-Project each; the only shuffles are the final record-linkage join and the
-DISTINCT (see SCALE.md).
+Scale posture: the 1-state case of ``plans.multistate.build_delivery``
+(one flow for one or 65 states): dictionaries are read to the driver once;
+the raw files stream through one Project each; the only shuffles are the
+final record-linkage join and the DISTINCT (see SCALE.md).
 """
 
 from __future__ import annotations
@@ -21,31 +22,13 @@ import argparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_engineering_capstone_project__spark.plans.cleaner import (
-    apply_clean_plan,
-    build_clean_plan,
+from data_engineering_capstone_project__spark.plans.multistate import StateSpec, state_final
+from data_engineering_capstone_project__spark.plans.qa import (
+    print_diff,
+    qa_vs_golden,
+    read_golden,
 )
-from data_engineering_capstone_project__spark.plans.derive import (
-    assemble_final,
-    derive_breakfast,
-    derive_lunch,
-)
-from data_engineering_capstone_project__spark.plans.qa import qa_vs_golden
-from data_engineering_capstone_project__spark.sources.io import read_tsv, write_parquet
-
-
-def clean_file(
-    spark: SparkSession,
-    path: str,
-    dict1: DataFrame,
-    dict2: DataFrame,
-    prefer: int,
-) -> DataFrame:
-    """Ingest one raw TSV and apply its dictionary-driven clean plan
-    (reference entry points 1+2: :25-270 per file)."""
-    raw = read_tsv(spark, path)
-    plan = build_clean_plan(raw.columns, dict1, dict2, prefer=prefer)
-    return apply_clean_plan(raw, plan)
+from data_engineering_capstone_project__spark.sources.io import write_parquet
 
 
 def run_reference_pipeline(
@@ -63,19 +46,11 @@ def run_reference_pipeline(
     Template priority mirrors the reference asymmetry (SURVEY §1.3): the
     breakfast file prefers template 2, the lunch file template 1.
     """
-    dict1 = read_tsv(spark, dict1_path)
-    dict2 = read_tsv(spark, dict2_path)
-    lunch = derive_lunch(clean_file(spark, lunch_path, dict1, dict2, prefer=1))
-    breakfast = derive_breakfast(
-        clean_file(spark, breakfast_path, dict1, dict2, prefer=2)
-    )
-    final = assemble_final(lunch, breakfast)
+    spec = StateSpec("", lunch_path, breakfast_path, dict1_path, dict2_path)
+    final = state_final(spark, spec).drop("state")
     if output_path:
         write_parquet(final, output_path)
-    qa = None
-    if golden_path:
-        golden = spark.read.parquet(golden_path)
-        qa = qa_vs_golden(final, golden)
+    qa = qa_vs_golden(final, read_golden(spark, golden_path)) if golden_path else None
     return final, qa
 
 
@@ -111,27 +86,9 @@ def main(argv: list[str] | None = None) -> int:
             f"common={row['count_common']} equivalent={row['equivalent']}{note}"
         )
         if not row["equivalent"]:
-            # show *where* the tables differ, not just that they do — the
-            # reference's INTERSECT counts (:1116-1126) never say which rows
-            if not row["note"]:
-                from data_engineering_capstone_project__spark.plans.qa import (
-                    qa_diff,
-                )
-
-                golden = spark.read.parquet(args.golden)
-                produced = final.select(*golden.columns)
-                for d in (
-                    qa_diff(produced, golden)
-                    .limit(2 * args.diff_sample)
-                    .collect()
-                ):
-                    side = (
-                        "produced-only" if d["side"] == "A" else "golden-only"
-                    )
-                    vals = {k: d[k] for k in golden.columns[:8]}
-                    print(f"  [{side}] {vals}")
+            if not row["note"]:  # show *where* the tables differ
+                print_diff(final, read_golden(spark, args.golden), args.diff_sample)
             return 2
-        return 0
     return 0
 
 

@@ -22,6 +22,22 @@ DEFAULT_APP = "data_engineering_capstone_project__spark"
 _NO_AQE_LOCK = threading.RLock()
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default ``spark.driver.memory``: 60% of the host's ``MemTotal``,
+    at most 16g, so a driver that outgrows it fails with a Java
+    ``OutOfMemoryError`` instead of being ended by the kernel's OOM
+    killer. 16g where ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    mb = int(line.split()[1]) * 6 // 10 // 1024
+                    return f"{min(mb, 16 * 1024)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "16g"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP,
     master: str | None = None,
@@ -55,7 +71,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         # wide-agg plans (auto-sized MinHash signatures run up to ~350
         # min-aggregates) stay inside whole-stage codegen; the default
         # cap of 100 fields silently drops them to interpreted eval

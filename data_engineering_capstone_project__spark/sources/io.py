@@ -10,14 +10,16 @@ stance, ``:42``), and column-name sanitation is driver-side Python.
 
 from __future__ import annotations
 
+import csv
 import os
 import stat as stat_mod
 from collections import OrderedDict
-from collections.abc import Iterable, Sequence
+from collections.abc import Iterable, Mapping, Sequence
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 TPCH_TABLES = (
     "region",
@@ -35,10 +37,11 @@ TPCH_TABLES = (
 
 def read_tsv(
     spark: SparkSession,
-    path: str,
+    path: str | Sequence[str],
     sep: str = "\t",
     header: bool = True,
     sanitize: bool = True,
+    columns: Sequence[str] | None = None,
 ) -> DataFrame:
     """S1+S2+S3: delimited-file load, every column as string.
 
@@ -46,21 +49,87 @@ def read_tsv(
     (``shareOurStrengthSQLCodev4.sql:9-11``) and its header-derived
     all-varchar schema (``:49-61``). ``sanitize`` reproduces the header
     cleanup at ``:35`` (strip stray artifacts/quotes, trim whitespace).
+
+    ``columns`` — the files' header as ``tsv_header`` reads it — replaces
+    Spark's header job with an explicit all-string schema; every file in
+    ``path`` must carry that header.
     """
+    if columns is not None:
+        schema = StructType([StructField(c, StringType()) for c in columns])
+        return spark.read.schema(schema).options(sep=sep, header=header).csv(path)
     df = spark.read.options(sep=sep, header=header, inferSchema=False).csv(path)
     if sanitize:
-        cleaned = [c.strip().strip('"').replace("﻿", "") for c in df.columns]
+        cleaned = [_sanitize(c) for c in df.columns]
         if cleaned != df.columns:
             df = df.toDF(*cleaned)
     return df
 
 
+def _sanitize(name: str) -> str:
+    return name.strip().strip('"').replace("﻿", "")
+
+
+def tsv_header(path: str, sep: str = "\t") -> list[str]:
+    """The column names ``read_tsv`` gives a local file, read on the
+    driver with no Spark job. Spark's CSV header rules apply first (an
+    empty name becomes ``_c<i>``; a name repeated case-insensitively gets
+    its index appended), then ``read_tsv``'s sanitizing."""
+    with open(local_path(path), newline="", encoding="utf-8") as f:
+        raw = next(csv.reader(f, delimiter=sep), [])
+    lower = [c.lower() for c in raw]
+    return [
+        f"_c{i}" if not c
+        else _sanitize(f"{c}{i}" if lower.count(c.lower()) > 1 else c)
+        for i, c in enumerate(raw)
+    ]
+
+
 def probe_header(spark: SparkSession, path: str) -> list[str]:
-    """S2: header-only read (``FirstRow=1, LastRow=1``, ``:26-28``)."""
-    first = spark.read.text(path).limit(1).collect()
-    if not first:
-        return []
-    return [c.strip().strip('"') for c in first[0][0].split("\t")]
+    """S2: header-only read (``FirstRow=1, LastRow=1``, ``:26-28``).
+    Driver-side: ``spark`` is unused and kept for existing callers."""
+    return tsv_header(path)
+
+
+def local_path(path: str) -> str:
+    """A local path or ``file:`` URI as an absolute path, without scheme.
+    Raises ``ValueError`` for any other scheme (``s3a:``, ``hdfs:``...)."""
+    u = urlparse(path)
+    if u.scheme not in ("", "file"):
+        raise ValueError(f"{path!r}: only local paths and file: URIs are supported")
+    return os.path.abspath(u.path if u.scheme == "file" else path)
+
+
+def read_tsv_tagged(
+    spark: SparkSession,
+    files: Mapping[str, Sequence[str]],
+    columns: Sequence[str],
+    tag: str,
+    sep: str = "\t",
+) -> DataFrame:
+    """One all-string scan over local files that share the header
+    ``columns`` (see ``tsv_header``), with the same CSV semantics as
+    ``read_tsv``. Each row gets a ``tag`` column holding the value its file
+    maps to in ``files``, read from ``_metadata.file_path``; a file mapped
+    to several values yields its rows once per value, and a row whose path
+    matches no key fails the job. N files cost one scan node and no header
+    job."""
+    df = read_tsv(spark, list(files), sep, columns=columns)
+    lookup = F.create_map(
+        *[
+            x
+            for p, vals in files.items()
+            for x in (F.lit(local_path(p)), F.array(*[F.lit(v) for v in vals]))
+        ]
+    )
+    # Spark reports the qualified, URL-encoded path (file:/a%20b.tsv); '+'
+    # is literal there, so it is protected from url_decode's form decoding
+    path = F.regexp_replace(
+        F.url_decode(F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")),
+        r"^file:",
+        "",
+    )
+    unmatched = F.raise_error(F.concat(F.lit(f"no {tag} for input file "), path))
+    return df.select("*", F.explode(F.coalesce(F.element_at(lookup, path), unmatched)).alias(tag))
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -237,6 +306,20 @@ def write_parquet(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
+
+
+def replace_dir(new: str, out: str, previous: str) -> None:
+    """Put local directory ``new`` at ``out`` with two renames, moving an
+    existing ``out`` to ``previous`` first (restored if the second rename
+    fails). All three paths must be on one filesystem."""
+    if os.path.exists(out):
+        os.rename(out, previous)
+    try:
+        os.rename(new, out)
+    except OSError:
+        if os.path.exists(previous):
+            os.rename(previous, out)
+        raise
 
 
 def write_bucketed(

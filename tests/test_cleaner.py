@@ -34,7 +34,7 @@ def _dicts(spark):
         ],
         DICT_SCHEMA,
     )
-    return d1, d2
+    return d1.collect(), d2.collect()
 
 
 def test_plan_rules(spark):

@@ -211,9 +211,9 @@ def test_multistate_qa_rollup_and_exit(spark, manifest_dir, capsys):
 
 
 def test_multistate_rollup_single_job_and_qa_gated_write(spark, manifest_dir):
-    """At 65 states the rollup must be ONE collected job (lazy per-state
-    qa_vs_golden plans unioned), and a QA failure must leave the previous
-    output untouched (write runs after — and only on — QA pass)."""
+    """The rollup must be ONE collected action (one qa_vs_golden grouped
+    by state), and a QA failure must leave the previous output untouched
+    (the staged output is published only on QA pass)."""
     from data_engineering_capstone_project__spark.plans import multistate as ms
 
     d, mpath = manifest_dir
@@ -234,14 +234,12 @@ def test_multistate_rollup_single_job_and_qa_gated_write(spark, manifest_dir):
         for s in specs
     ]
 
-    # ONE driver action for the whole 3-state QA rollup (collect on the
-    # unioned report plan) — job counts are meaningless under AQE (one
-    # action fans into a job per query stage), so count actions directly.
-    # Plan construction (tiny dictionary-TSV collects) happens first,
-    # outside the counted window: those are ~16-row metadata reads, not
-    # per-state data jobs.
-    dict_cache = {}
-    finals = [(s, ms.state_final(spark, s, dict_cache)) for s in specs_g]
+    # ONE driver action for the whole 3-state QA rollup (one grouped
+    # qa_vs_golden over the state-tagged plan) — job counts are
+    # meaningless under AQE (one action fans into a job per query stage),
+    # so count actions directly. Plan construction (one dictionary
+    # collect) happens first, outside the counted window.
+    combined = ms.build_delivery(spark, specs_g)
     dfcls = type(spark.range(1))  # concrete class (classic vs connect)
     actions: list[str] = []
     orig_collect, orig_count = dfcls.collect, dfcls.count
@@ -257,7 +255,7 @@ def test_multistate_rollup_single_job_and_qa_gated_write(spark, manifest_dir):
     dfcls.collect = counted_collect
     dfcls.count = counted_count
     try:
-        rows = ms.qa_rollup_rows(spark, finals)
+        rows = ms.qa_rollup_rows(spark, specs_g, combined)
     finally:
         dfcls.collect = orig_collect
         dfcls.count = orig_count
@@ -309,3 +307,284 @@ def test_manifest_validation(spark, manifest_dir):
         json.dump({"states": []}, f)
     with pytest.raises(ValueError, match="no 'states'"):
         load_manifest(bad)
+
+
+def _tree(path):
+    """{relative path: bytes} of every file under ``path``."""
+    out = {}
+    for dp, _, fs in os.walk(path):
+        for f in fs:
+            full = os.path.join(dp, f)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = fh.read()
+    return out
+
+
+def _staging_left(out):
+    parent, base = os.path.split(out)
+    return [n for n in os.listdir(parent) if n.startswith(f".{base}.staging")]
+
+
+@pytest.fixture(scope="module")
+def gated_specs(spark, manifest_dir):
+    """(specs with passing goldens, the same with CC's golden corrupted);
+    the goldens are the delivery's own per-state output."""
+    from dataclasses import replace
+
+    from pyspark.sql import functions as F
+
+    from data_engineering_capstone_project__spark.plans import multistate as ms
+
+    d, mpath = manifest_dir
+    specs, _ = ms.load_manifest(mpath)
+    gdir = os.path.join(d, "gate_goldens")
+    ms.build_delivery(spark, specs).write.mode("overwrite").partitionBy(
+        "state"
+    ).parquet(gdir)
+    good = [replace(s, golden=os.path.join(gdir, f"state={s.state}")) for s in specs]
+    badp = os.path.join(d, "gate_golden_cc_bad")
+    spark.read.parquet(good[2].golden).withColumn(
+        "NCES ID", F.col("NCES ID").substr(1, 3)
+    ).write.mode("overwrite").parquet(badp)
+    return good, [*good[:2], replace(good[2], golden=badp)]
+
+
+def test_qa_failure_keeps_previous_output(spark, manifest_dir, gated_specs):
+    """A QA-failing run leaves the previous output byte-identical and no
+    staging directory behind; ``write_on_qa_fail=True`` still publishes."""
+    from data_engineering_capstone_project__spark.plans import multistate as ms
+
+    d, _ = manifest_dir
+    good, bad = gated_specs
+    out = os.path.join(d, "gate_out_fail")
+    _, rollup = ms.run_multistate(spark, good, output_path=out)
+    assert all(r["equivalent"] for r in rollup.collect())
+    before = _tree(out)
+    assert sum(f.endswith(".parquet") for f in before) == 3  # one per state
+
+    _, rollup = ms.run_multistate(spark, bad, output_path=out)
+    assert [r["state"] for r in rollup.collect() if r["equivalent"] is False] == ["CC"]
+    assert _tree(out) == before
+    assert _staging_left(out) == []
+
+    ms.run_multistate(spark, bad, output_path=out, write_on_qa_fail=True)
+    after = _tree(out)
+    assert after != before and sum(f.endswith(".parquet") for f in after) == 3
+    assert _staging_left(out) == []
+
+
+def test_crash_before_publish_keeps_previous_output(
+    spark, manifest_dir, gated_specs, monkeypatch
+):
+    """An exception between the staged write and the publish leaves the
+    previous output intact and removes the staging directory."""
+    from data_engineering_capstone_project__spark.plans import multistate as ms
+
+    d, _ = manifest_dir
+    good, _ = gated_specs
+    out = os.path.join(d, "gate_out_crash")
+    ms.run_multistate(spark, good, output_path=out)
+    before = _tree(out)
+
+    def crash(*_a, **_k):
+        assert len(_staging_left(out)) == 1  # the staged write happened
+        raise RuntimeError("injected crash before publish")
+
+    monkeypatch.setattr(ms, "qa_rollup_rows", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        ms.run_multistate(spark, good, output_path=out)
+    assert _tree(out) == before
+    assert _staging_left(out) == []
+
+
+def test_65_state_delivery_job_bound_and_parity(spark, tmp_path):
+    """The paper's 65-state shape, a few rows per state, one state with
+    extra undictionaried columns and one with its own dictionary: the
+    delivery launches a bounded number of jobs, and each state's written
+    rows equal that state run alone through ``run_reference_pipeline``."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from data_engineering_capstone_project__spark.plans import multistate as ms
+    from data_engineering_capstone_project__spark.plans.pipeline import (
+        run_reference_pipeline,
+    )
+
+    d = str(tmp_path)
+    dict1 = _write_tsv(d, "dict1.tsv", DICT_HEADER, DICT1_ROWS)
+    dict2 = _write_tsv(d, "dict2.tsv", DICT_HEADER, DICT2_ROWS)
+    # S07 keeps OLD_COL under a clean name instead of dropping it
+    own = _write_tsv(
+        d, "dict1_s07.tsv", DICT_HEADER,
+        [(*r[:2], "Legacy Column", "") if r[1] == "OLD_COL" else r for r in DICT1_ROWS],
+    )
+    specs = []
+    for i in range(65):
+        st = f"S{i:02d}"
+        lunch, brkf = _state_rows(st, n=2)
+        lunch = [(*r[:5], str(int(r[5]) + i), *r[6:]) for r in lunch]
+        lh = LUNCH_HEADER
+        if i == 3:
+            lh = [*LUNCH_HEADER, "EXTRA_A", "EXTRA_B"]
+            lunch = [(*r, "x", "y") for r in lunch]
+        specs.append(
+            ms.StateSpec(
+                st,
+                _write_tsv(d, f"{st}_lunch.tsv", lh, lunch),
+                _write_tsv(d, f"{st}_breakfast.tsv", BRKF_HEADER, brkf),
+                own if i == 7 else dict1,
+                dict2,
+            )
+        )
+    out = os.path.join(d, "out")
+    sc = spark.sparkContext
+    sc.setJobGroup("multistate_65", "65-state delivery")
+    try:
+        ms.run_multistate(spark, specs, output_path=out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("multistate_65"))
+    assert jobs <= 20, jobs
+
+    written = spark.read.parquet(out)
+    got: dict[str, list] = {}
+    for r in written.collect():
+        got.setdefault(r["state"], []).append(r.asDict())
+
+    def alone(s):
+        final = run_reference_pipeline(spark, s.lunch, s.breakfast, s.dict1, s.dict2)[0]
+        return s.state, final.columns, final.collect()
+
+    with ThreadPoolExecutor(4) as pool:
+        results = list(pool.map(alone, specs))
+    assert len(got) == 65 and all(len(v) == 2 for v in got.values())
+    for st, cols, rows in results:
+        extra = [c for c in written.columns if c not in cols and c != "state"]
+        assert all(r[c] is None for r in got[st] for c in extra), st
+        assert sorted(tuple(r[c] for c in cols) for r in got[st]) == sorted(
+            tuple(r) for r in rows
+        ), st
+    cols_of = {st: cols for st, cols, _ in results}
+    assert "Legacy Column" in cols_of["S07"] and "Legacy Column" not in cols_of["S00"]
+    assert "EXTRA_A" not in written.columns
+    # Unique ID keeps the reference's 'WI' prefix in every state
+    assert {r["Unique ID"][:3] for v in got.values() for r in v} == {"WI-"}
+
+
+def test_missing_derive_input_refused(spark, manifest_dir, tmp_path):
+    """A state whose dictionary leaves SCHOOL_NAME unrenamed has no
+    ``school name`` after cleaning: the delivery refuses it by name
+    instead of reading NULL for it through the by-name union."""
+    from dataclasses import replace
+
+    from data_engineering_capstone_project__spark.plans import multistate as ms
+
+    d, mpath = manifest_dir
+    specs, _ = ms.load_manifest(mpath)
+    rows = [(*r[:2], "SCHOOL_NAME", "") if r[1] == "SCHOOL_NAME" else r for r in DICT1_ROWS]
+    own = _write_tsv(str(tmp_path), "dict1_keep_name.tsv", DICT_HEADER, rows)
+    bad = [specs[0], replace(specs[1], dict1=own)]
+    out = os.path.join(str(tmp_path), "out")
+    with pytest.raises(ValueError, match=r"\['BB'\]: cleaned lunch file lacks \['school name'\]"):
+        ms.run_multistate(spark, bad, output_path=out)
+    assert not os.path.exists(out) and _staging_left(out) == []
+
+
+def test_remote_paths_refused_and_file_uri_output(spark, manifest_dir, tmp_path):
+    """Inputs and output are local: another scheme raises before any plan
+    is built, and a ``file:`` URI output lands at its local path."""
+    from dataclasses import replace
+
+    from data_engineering_capstone_project__spark.plans import multistate as ms
+
+    d, mpath = manifest_dir
+    specs, _ = ms.load_manifest(mpath)
+    for url in ("s3a://bucket/out", "hdfs://nn/out"):
+        with pytest.raises(ValueError, match="only local paths"):
+            ms.run_multistate(spark, specs, output_path=url)
+    with pytest.raises(ValueError, match="only local paths"):
+        ms.run_multistate(spark, [replace(specs[0], lunch="s3a://bucket/l.tsv")])
+    with open(mpath) as f:
+        doc = json.load(f)
+    doc["states"][0]["breakfast"] = "hdfs://nn/b.tsv"
+    remote = os.path.join(str(tmp_path), "remote.json")
+    with open(remote, "w") as f:
+        json.dump(doc, f)
+    with pytest.raises(ValueError, match="only local paths"):
+        ms.load_manifest(remote)
+
+    out = os.path.join(str(tmp_path), "uri_out")
+    ms.run_multistate(spark, specs[:1], output_path=f"file://{out}")
+    assert os.path.isdir(os.path.join(out, "state=AA"))
+    assert _staging_left(out) == []
+
+
+def test_read_tsv_tagged_paths(spark, tmp_path, monkeypatch):
+    """Tags come from each row's file path, also for names Spark reports
+    URL-encoded; a file mapped to two values yields its rows twice, and a
+    row whose path matches no key fails the job instead of vanishing."""
+    from data_engineering_capstone_project__spark.sources import io as io_mod
+
+    d = os.path.join(str(tmp_path), "dir with space")
+    os.makedirs(d)
+    a = _write_tsv(d, "a b+c%1.tsv", ["X"], [("1",), ("2",)])
+    b = _write_tsv(d, "ü.tsv", ["X"], [("3",)])
+    tagged = io_mod.read_tsv_tagged(spark, {a: ["S1"], b: ["S2", "S3"]}, ["X"], "state")
+    assert sorted((r["X"], r["state"]) for r in tagged.collect()) == [
+        ("1", "S1"), ("2", "S1"), ("3", "S2"), ("3", "S3"),
+    ]
+    # one file, one value: the same lookup
+    one = io_mod.read_tsv_tagged(spark, {f"file://{a}": ["S1"]}, ["X"], "state")
+    assert [r["state"] for r in one.collect()] == ["S1", "S1"]
+
+    monkeypatch.setattr(io_mod, "local_path", lambda p: "/elsewhere" + p)
+    with pytest.raises(Exception, match="no state for input file"):
+        io_mod.read_tsv_tagged(spark, {a: ["S1"]}, ["X"], "state").collect()
+
+
+def test_read_golden_schema_is_sparks(spark, tmp_path):
+    """``read_golden`` gives the schema Spark infers: from the footer with
+    no Spark job for plain types, and through Spark's own inference for
+    types whose mapping follows reader settings (tz-naive timestamps,
+    binary under binaryAsString, unsigned ints)."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_engineering_capstone_project__spark.plans.qa import read_golden
+
+    plain = os.path.join(str(tmp_path), "plain.parquet")
+    pq.write_table(
+        pa.table({
+            "n": pa.array([1], pa.int64()), "x": pa.array([0.5]), "s": ["a"],
+            "d": pa.array([dt.date(2020, 1, 1)]), "flag": [True],
+        }),
+        plain,
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("read_golden_plain", "footer schema")
+    try:
+        got = read_golden(spark, plain)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("read_golden_plain") == []
+    assert got.dtypes == spark.read.parquet(plain).dtypes
+
+    tricky = os.path.join(str(tmp_path), "tricky.parquet")
+    pq.write_table(
+        pa.table({
+            "ts": pa.array([dt.datetime(2020, 1, 1, 12)], pa.timestamp("us")),
+            "u": pa.array([7], pa.uint32()),
+            "bin": pa.array([b"ab"], pa.binary()),
+        }),
+        tricky,
+    )
+    assert read_golden(spark, tricky).dtypes == spark.read.parquet(tricky).dtypes
+    assert dict(read_golden(spark, tricky).dtypes)["ts"] == "timestamp_ntz"
+    key = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        assert dict(read_golden(spark, tricky).dtypes)["bin"] == "string"
+    finally:
+        spark.conf.set(key, prev)

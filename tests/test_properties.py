@@ -90,6 +90,7 @@ def test_clean_plan_partition_invariants(spark):
     d2 = spark.createDataFrame(
         [("y", "col_f", "From D2", None), ("y", "col_g", "Clean G", None)], schema
     )
+    d1, d2 = d1.collect(), d2.collect()
     for prefer in (1, 2):
         cols = ["col_a", "col_b", "col_c", "col_d", "col_e", "col_f", "col_g", "col_z"]
         plan = build_clean_plan(cols, d1, d2, prefer=prefer)

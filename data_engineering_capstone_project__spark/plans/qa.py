@@ -8,13 +8,12 @@ feature, plus an ``exceptAll`` diff the reference lacks (SURVEY §2.6 E2).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_engineering_capstone_project__spark.sources.io import local_path
+from data_engineering_capstone_project__spark.sources.io import footer_schema
 
 
 def qa_compare(a: DataFrame, b: DataFrame, by: Sequence[str] = ()) -> DataFrame:
@@ -105,37 +104,13 @@ def qa_vs_golden(
 
 
 def read_golden(spark: SparkSession, path: str) -> DataFrame:
-    """A golden parquet file or directory. When it is local, unpartitioned,
-    and every column has a type whose Spark mapping no parquet-reader
-    setting changes (``sources.io._SCHEMA_CONFS``), its schema is read on
-    the driver from one footer (pyarrow), with no Spark schema-inference
-    job; otherwise Spark infers it."""
-    import pyarrow.dataset as ds
-    import pyarrow.types as pat
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    # timestamps, binary and unsigned ints are left out: their Spark type
-    # follows inferTimestampNTZ, int96AsTimestamp, nanosAsLong or
-    # binaryAsString, or arrow has no mapping for it
-    conf_free = (
-        pat.is_boolean, pat.is_signed_integer, pat.is_float32, pat.is_float64,
-        pat.is_decimal128, pat.is_string, pat.is_large_string, pat.is_date32,
-    )
-    try:
-        local = local_path(path)
-        found = ds.dataset(local, format="parquet")
-    except (OSError, ValueError):  # remote, missing, or not parquet
+    """A golden parquet file or directory, with its schema read from one
+    footer when ``footer_schema`` can (no Spark schema-inference job);
+    otherwise Spark infers it."""
+    schema = footer_schema(path)
+    if schema is None:
         return spark.read.parquet(path)
-    root = local if os.path.isdir(local) else os.path.dirname(local)
-    names = found.schema.names
-    if (
-        not names
-        or len({n.lower() for n in names}) < len(names)  # caseSensitive decides
-        or any(os.path.dirname(f) != root for f in found.files)  # partition dirs
-        or not all(any(is_t(f.type) for is_t in conf_free) for f in found.schema)
-    ):
-        return spark.read.parquet(path)
-    return spark.read.schema(from_arrow_schema(found.schema)).parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def qa_diff(a: DataFrame, b: DataFrame) -> DataFrame:

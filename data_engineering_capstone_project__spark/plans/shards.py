@@ -1109,11 +1109,9 @@ def reconcile_sharded_near_dups(
                 "corpus_id", id_col
             )
         else:
-            sigs = dedup_mod.minhash_signatures(
-                union, id_col, text_col, nh, sk
+            bl = dedup_mod.minhash_band_rows(
+                union, id_col, text_col, nh, nb, sk
             )
-            banded = sigs.select(id_col, *dedup_mod._band_cols(nh, nb))
-            bl = dedup_mod._banded_long(banded, id_col, nb)
         a = bl.select(
             F.col(id_col).alias("id_a"), "band", "bucket"
         )

@@ -54,9 +54,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Callable
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_capstone_project__spark.sources import commitlog
@@ -74,6 +75,7 @@ __all__ = [
     "load_fingerprint_log",
     "load_minhash_log",
     "corpus_digest",
+    "observe_digest",
     "is_current",
     "save_bm25_index",
     "load_bm25_index",
@@ -289,15 +291,21 @@ def load_artifact_log(
 
     Resolution is FOLDS-aware (r12): versions a committed compaction
     fold subsumes are excluded even when a compactor crash left them
-    on disk — the union is exactly-once under any crash interleaving."""
+    on disk — the union is exactly-once under any crash interleaving.
+
+    The schema comes from the latest version's footer (``footer_schema``,
+    read on the driver): the version set grows every tick, so a cache
+    keyed on it never hits, and inferring would cost a Spark job per
+    read. Spark infers it only when the footer cannot give it."""
     vs = visible_artifact_versions(path)
     if not vs:
         raise FileNotFoundError(f"no committed version under {path!r}")
     meta = load_artifact_meta(path, vs[-1])
-    df = io.read_parquet_cached(
-        spark, *[os.path.join(path, f"v={v}", part) for v in vs]
-    )
-    return df, meta
+    paths = [os.path.join(path, f"v={v}", part) for v in vs]
+    schema = io.footer_schema(paths[-1])
+    if schema is None:
+        return io.read_parquet_cached(spark, *paths), meta
+    return spark.read.schema(schema).parquet(*paths), meta
 
 
 def compact_artifact_log(
@@ -554,16 +562,38 @@ def corpus_digest(df: DataFrame, cols: list[str] | None = None) -> str:
     independent of partitioning and row order."""
     from data_engineering_capstone_project__spark.session import no_aqe
 
-    cs = cols or df.columns
     # single-row output: AQE's stage-materialization job is pure
     # overhead here (optimization r15 — digest runs on every
     # steady-state index load, so its per-call cost is a hot path)
     with no_aqe(df.sparkSession):
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64(*[F.col(c) for c in cs])).alias("x"),
-        ).first()
+        row = df.agg(*_digest_aggs(cols or df.columns)).first()
     return f"{row['n']}:{row['x']}"
+
+
+def _digest_aggs(cols: list[str]) -> list[Column]:
+    return [
+        F.count("*").alias("n"),
+        F.bit_xor(F.xxhash64(*[F.col(c) for c in cols])).alias("x"),
+    ]
+
+
+def observe_digest(
+    df: DataFrame, cols: list[str]
+) -> tuple[DataFrame, Callable[[], str]]:
+    """``df`` with an ``Observation`` of its :func:`corpus_digest` over
+    ``cols``, and a getter for the digest. The digest is computed by the
+    first action that runs the returned frame (a write, say) instead of
+    by a job of its own; call the getter only after that action."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    observed = df.observe(obs, *_digest_aggs(cols))
+
+    def digest() -> str:
+        row = obs.get
+        return f"{row['n']}:{row['x']}"
+
+    return observed, digest
 
 
 def digest_count(digest: str) -> int:

@@ -114,20 +114,24 @@ def read_tsv_tagged(
     matches no key fails the job. N files cost one scan node and no header
     job."""
     df = read_tsv(spark, list(files), sep, columns=columns)
+    # Spark reports each row's file as the URI of its local path, encoded
+    # by Hadoop's Path (file:/a%20b+c.tsv). The keys are encoded the same
+    # way on the driver, once per file, so a row costs one map lookup: no
+    # per-row regex or URL decoding, whose generated code is costly to
+    # JIT-compile (a C2 compile of it took seconds and ~400 MB of native
+    # memory, at a point that varied from run to run)
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     lookup = F.create_map(
         *[
             x
             for p, vals in files.items()
-            for x in (F.lit(local_path(p)), F.array(*[F.lit(v) for v in vals]))
+            for x in (
+                F.lit("file:" + hpath(local_path(p)).toUri().getRawPath()),
+                F.array(*[F.lit(v) for v in vals]),
+            )
         ]
     )
-    # Spark reports the qualified, URL-encoded path (file:/a%20b.tsv); '+'
-    # is literal there, so it is protected from url_decode's form decoding
-    path = F.regexp_replace(
-        F.url_decode(F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")),
-        r"^file:",
-        "",
-    )
+    path = F.col("_metadata.file_path")
     unmatched = F.raise_error(F.concat(F.lit(f"no {tag} for input file "), path))
     return df.select("*", F.explode(F.coalesce(F.element_at(lookup, path), unmatched)).alias(tag))
 
@@ -220,6 +224,41 @@ def read_parquet_cached(spark: SparkSession, *paths: str) -> DataFrame:
         _SCHEMA_CACHE.popitem(last=False)
     _SCHEMA_CACHE[cache_key] = df.schema
     return df
+
+
+def footer_schema(path: str) -> StructType | None:
+    """The Spark schema of a local, unpartitioned parquet file or
+    directory, read on the driver from one footer (pyarrow), with no
+    Spark schema-inference job. None when Spark must infer it: a remote
+    or missing path, partition directories, names that differ only in
+    case (``spark.sql.caseSensitive`` decides), or a column type whose
+    Spark mapping a parquet-reader setting changes (``_SCHEMA_CONFS``)."""
+    import pyarrow.dataset as ds
+    import pyarrow.types as pat
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    # timestamps, binary and unsigned ints are left out: their Spark type
+    # follows inferTimestampNTZ, int96AsTimestamp, nanosAsLong or
+    # binaryAsString, or arrow has no mapping for it
+    conf_free = (
+        pat.is_boolean, pat.is_signed_integer, pat.is_float32, pat.is_float64,
+        pat.is_decimal128, pat.is_string, pat.is_large_string, pat.is_date32,
+    )
+    try:
+        local = local_path(path)
+        found = ds.dataset(local, format="parquet")
+    except (OSError, ValueError):  # remote, missing, or not parquet
+        return None
+    root = local if os.path.isdir(local) else os.path.dirname(local)
+    names = found.schema.names
+    if (
+        not names
+        or len({n.lower() for n in names}) < len(names)
+        or any(os.path.dirname(f) != root for f in found.files)
+        or not all(any(is_t(f.type) for is_t in conf_free) for f in found.schema)
+    ):
+        return None
+    return from_arrow_schema(found.schema)
 
 
 def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
@@ -459,9 +498,18 @@ def write_versioned(df: DataFrame, path: str) -> int:
     from data_engineering_capstone_project__spark.sources import commitlog
 
     n, target = commitlog.claim_version(path)
-    df.write.mode("overwrite").parquet(target)
+    write_claimed(df, target)
     commitlog.commit_version(path, n)
     return n
+
+
+def write_claimed(df: DataFrame, target: str) -> None:
+    """Write a payload into a claimed version directory. "append", not
+    "overwrite": an overwrite deletes the directory, and with it the
+    ``_CLAIM`` marker (so a concurrent writer could claim the same
+    version) and any ``_FENCED`` marker a lease break stamped (so a
+    fenced claim could commit). Readers skip ``_``-files."""
+    df.write.mode("append").parquet(target)
 
 
 def claim_versioned_write(df: DataFrame, path: str) -> int:
@@ -478,7 +526,7 @@ def claim_versioned_write(df: DataFrame, path: str) -> int:
     from data_engineering_capstone_project__spark.sources import commitlog
 
     n, target = commitlog.claim_version(path)
-    df.write.mode("overwrite").parquet(target)
+    write_claimed(df, target)
     return n
 
 

@@ -286,3 +286,60 @@ def test_mix_sources_share_property(spark):
             realized = toks.get(s, 0) / total
             # 25 docs/source at sf0.01 -> generous sampling tolerance
             assert abs(realized - share) < 0.25, (s, realized, share)
+
+
+_KERNEL_EDGE_TEXTS = [
+    "", "   ", "\t\n ", None, "abc", "a", "aaaaaaaaaaaa", "ab ab ab ab ab",
+    "Ünïcödé ☃ — 漢字かな", "  Mixed   CASE\ttext  ", "🙂🙂🙂🙂🙂🙂",
+]
+
+
+@given(
+    st.lists(
+        st.one_of(
+            st.none(),
+            st.text(alphabet="ab \t\nÜ☃漢", max_size=30),
+            st.text(max_size=40),
+            st.builds(
+                lambda s, n: s * n,
+                st.text(alphabet="xyz ", min_size=1, max_size=4),
+                st.integers(1, 12),
+            ),
+        ),
+        min_size=1,
+        max_size=25,
+    ),
+    st.integers(min_value=1, max_value=6),
+    st.sampled_from([(4, 2), (6, 3), (8, 8), (9, 3)]),
+)
+@settings(max_examples=prof(6, 30), deadline=None)
+def test_minhash_band_rows_match_signature_reference(spark, texts, shingle_k, banding):
+    """``minhash_band_rows`` (explode(sequence) shingles, band hashes in
+    the aggregate, SQL text) gives the same (id, band, bucket) rows, with
+    the same schema, as ``minhash_signatures`` → ``_band_cols`` → long
+    form: empty and whitespace-only text, text shorter than the shingle,
+    repeated shingles, non-ASCII text and NULL text included. Each
+    example is one batch of documents."""
+    from pyspark.sql import functions as F
+
+    from data_engineering_capstone_project__spark.operators import dedup
+
+    num_hashes, bands = banding
+    rows = list(enumerate(_KERNEL_EDGE_TEXTS + texts))
+    # a repeated id merges its rows' shingles in both forms
+    rows.append((0, "a second row for id zero"))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = dedup.minhash_signatures(df, "doc_id", "text", num_hashes, shingle_k)
+    banded = sigs.select("doc_id", *dedup._band_cols(num_hashes, bands))
+    ref = banded.select(
+        "doc_id",
+        F.explode(
+            F.array(*[
+                F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("bucket"))
+                for b in range(bands)
+            ])
+        ).alias("bb"),
+    ).select("doc_id", "bb.band", "bb.bucket")
+    got = dedup.minhash_band_rows(df, "doc_id", "text", num_hashes, bands, shingle_k)
+    assert got.schema == ref.schema
+    assert sorted(got.collect()) == sorted(ref.collect())

@@ -6204,7 +6204,7 @@ def x_bm25_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 postings, stage, stats=stats,
                 n_term_buckets=text._BM25_TERM_BUCKETS,
             )
-        art.compact_bm25_postings(spark, stage)
+        art.compact_artifact_log(spark, stage)
         try:
             os.rename(stage, path)
         except OSError:
@@ -7410,7 +7410,7 @@ def x_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
       zero and leaves the vector count unchanged (the delta is under
       the tick's exactly-once protocol, not a bare committer append);
     - ``compaction_preserves_probe``: folding the log
-      (``compact_publication_log`` → ``compact_ivf_log``) keeps probe
+      (``compact_publication_log`` → ``compact_artifact_log``) keeps probe
       results and counts bit-identical;
     - ``refit_probe_matches`` / ``refit_qerr_improved``: the
       scheduled remedy (``refit_ivf_index``) re-encodes under a new

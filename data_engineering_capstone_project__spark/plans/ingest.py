@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from data_engineering_capstone_project__spark.operators import dedup
 from data_engineering_capstone_project__spark.session import no_aqe
 from data_engineering_capstone_project__spark.sources import artifacts as art
+from data_engineering_capstone_project__spark.sources import commitlog
 from data_engineering_capstone_project__spark.sources.io import (
     claim_versioned_write,
     commit_versioned,
@@ -61,8 +62,6 @@ def _bm25_log_active(root: str) -> bool:
     """True when the ingest root maintains an incremental BM25 posting
     log (the bootstrap created one). Presence-keyed so ticks and
     recovery self-configure — no flag can desync from the layout."""
-    from data_engineering_capstone_project__spark.sources import commitlog
-
     return bool(commitlog.committed_versions(os.path.join(root, _BM25)))
 
 
@@ -76,8 +75,6 @@ _IVF_CB = "ivf_codebook"
 def _ivf_log_active(root: str) -> bool:
     """True when the ingest root maintains an incremental IVF vector
     log (the bootstrap created one)."""
-    from data_engineering_capstone_project__spark.sources import commitlog
-
     return bool(commitlog.committed_versions(os.path.join(root, _IVF)))
 
 # selection-id semi-join broadcast ceiling (VERDICT r8 #2): k ids are a
@@ -346,39 +343,6 @@ def _schema_note_hash(path: str, n: int) -> str | None:
         return None
 
 
-_FOLDS_NOTE = "_FOLDS.json"
-
-
-def _folds_note(path: str, n: int) -> list[int]:
-    """Versions that committed version ``n`` SUBSUMES (written by
-    compaction before its fold commits). Empty for tick publishes."""
-    import json as _json
-
-    try:
-        with open(os.path.join(path, f"v={n}", _FOLDS_NOTE)) as f:
-            return [int(x) for x in _json.load(f)]
-    except (OSError, ValueError):
-        return []
-
-
-def _visible_corpus_versions(path: str) -> list[int]:
-    """Committed versions minus those a committed FOLD subsumes (r11):
-    compaction claims its folded version with a ``_FOLDS`` note naming
-    the captured inputs and only then commits — the commit marker is
-    the single atomic switch from inputs-visible to fold-visible, so a
-    compactor crash between its commit and the physical expiry can
-    never double-count the union (the pre-r11 write-then-delete shape
-    could: both the fold and its inputs were committed until the
-    deletes finished)."""
-    from data_engineering_capstone_project__spark.sources import commitlog
-
-    vs = commitlog.committed_versions(path)
-    folded: set[int] = set()
-    for v in vs:
-        folded.update(_folds_note(path, v))
-    return [v for v in vs if v not in folded]
-
-
 def read_ingest_corpus(
     spark: SparkSession,
     root: str,
@@ -414,8 +378,8 @@ def read_ingest_corpus(
     if version is not None:
         return _strip(read_versioned(spark, path, version))
     # visible = committed minus fold-subsumed (crash-safe compaction
-    # expiry, r11 — see _visible_corpus_versions)
-    vs = _visible_corpus_versions(path)
+    # expiry, r11 — see commitlog.visible_versions)
+    vs = commitlog.visible_versions(path)
     if not vs:
         raise FileNotFoundError(
             f"no committed publication under {path!r} — bootstrap with "
@@ -647,8 +611,6 @@ def break_ingest_lease(root: str) -> None:
     stale batch-sized delta that only ever causes extra DROPS (both
     probes are presence-based), never a double publish; the corpus
     publish itself is fully closed by the fence."""
-    from data_engineering_capstone_project__spark.sources import commitlog
-
     for log in (_CORPUS, _FP, _MH):
         commitlog.fence_uncommitted(os.path.join(root, log))
     _bump_lease_generation(root)
@@ -989,33 +951,20 @@ def refit_ivf_index(
     Takes the ingest lease (refit races a tick's append otherwise:
     the fold would silently drop a delta committed after its capture —
     the lease serializes them). Returns the folded log version."""
-    import shutil
-
     from data_engineering_capstone_project__spark.operators import (
         similarity as sim,
     )
-    from data_engineering_capstone_project__spark.sources import commitlog
 
-    path = os.path.join(root, _IVF)
-    gen = acquire_ingest_lease(root) if lease else None
-    try:
-        vectors, meta = art.load_ivf_log(spark, path)
-        vs = art.visible_artifact_versions(path)
-        leftovers = [
-            v for v in commitlog.committed_versions(path) if v not in vs
-        ]
-        id_col, vec_col, cell_col = (
-            meta["id_col"], meta["vec_col"], meta["cell_col"],
-        )
+    def refit(vectors: DataFrame, meta: dict) -> tuple[DataFrame, dict]:
+        vec_col, cell_col = meta["vec_col"], meta["cell_col"]
         vecs = vectors.drop(cell_col)
-        if n_centroids is None:
+        k = n_centroids
+        if k is None:
             # keep the outgoing codebook's size unless told otherwise
             _, cb_meta = art.load_centroids_by_digest(
-                spark, os.path.join(root, _IVF_CB),
-                meta["codebook_digest"],
+                spark, os.path.join(root, _IVF_CB), meta["codebook_digest"]
             )
-            n_centroids = int(cb_meta["k"])
-        k = n_centroids
+            k = int(cb_meta["k"])
         cents = sim.kmeans_centroids(
             vecs, vec_col=vec_col, n_centroids=k, n_iter=n_iter,
             sample_rows=sample_rows, seed=seed,
@@ -1033,35 +982,22 @@ def refit_ivf_index(
             spark,
             os.path.join(root, _IVF_CB),
             cents,
-            corpus_digest=f"refit:{len(vs)}",
+            corpus_digest=meta["corpus_digest"],
             kind="ivf",
             fit_stats=fit_stats,
             extra_meta={"codebook_digest": cb_dg, "vec_col": vec_col},
         )
-        carried = {
-            key: val
-            for key, val in meta.items()
-            if key in ("batch_digest", "publish_version", "family")
-        }
         _check_lease_generation(root, gen)
-        v = art.save_ivf_delta(
-            assigned,
-            path,
-            id_col=id_col,
-            vec_col=vec_col,
-            cell_col=cell_col,
-            codebook_digest=cb_dg,
-            cell_stats=cell_stats,
-            corpus_digest=f"refit:{len(vs)}",
-            extra_meta=carried,
+        return assigned, {
+            **meta, "codebook_digest": cb_dg, "cell_stats": cell_stats,
+        }
+
+    gen = acquire_ingest_lease(root) if lease else None
+    try:
+        return art.fold_artifact_log(
+            spark, os.path.join(root, _IVF), refit, label="refit",
             precommit=lambda: _check_lease_generation(root, gen),
-            folds=sorted(set(vs) | set(leftovers)),
         )
-        for old in leftovers + vs:
-            shutil.rmtree(
-                os.path.join(path, f"v={old}"), ignore_errors=True
-            )
-        return v
     finally:
         if lease:
             release_ingest_lease(root, gen)
@@ -1075,14 +1011,12 @@ def live_index_digests(root: str) -> set[str]:
     an artifact keyed by the bootstrap corpus while that corpus is
     still live in the log (unit-pinned). O(versions) tiny meta reads,
     bounded by compaction; zero scans."""
-    from data_engineering_capstone_project__spark.sources import commitlog
-
     digs: set[str] = set()
     for sub in (_FP, _MH, _BM25, _IVF):
         p = os.path.join(root, sub)
         if not commitlog.committed_versions(p):
             continue
-        for v in art.visible_artifact_versions(p):
+        for v in commitlog.visible_versions(p):
             m = art.load_artifact_meta(p, v)
             for key in ("corpus_digest", "codebook_digest"):
                 d = m.get(key)
@@ -1100,15 +1034,13 @@ def _expire_stale_codebooks(root: str, keep: int = 1) -> list[int]:
     version numbers."""
     import shutil
 
-    from data_engineering_capstone_project__spark.sources import commitlog
-
     cbp = os.path.join(root, _IVF_CB)
     if not commitlog.committed_versions(cbp) or not _ivf_log_active(root):
         return []
     want = art.load_ivf_log_stats(os.path.join(root, _IVF))[0][
         "codebook_digest"
     ]
-    vs = art.visible_artifact_versions(cbp)
+    vs = commitlog.visible_versions(cbp)
     referenced = {
         v
         for v in vs
@@ -1225,29 +1157,12 @@ def retire_docs(
     import json as _json
     import shutil
 
-    from data_engineering_capstone_project__spark.sources import commitlog
-
     frame_valued = isinstance(ids, DataFrame)
-    path = os.path.join(root, _CORPUS)
-    gen = acquire_ingest_lease(root) if lease else None
-    ids_df = None
-    try:
-        # a predecessor retirement may have crashed mid-refold — finish
-        # it before folding again (its marker carries its own ids)
-        _heal_pending_retirement(spark, root, gen)
-        vs = _visible_corpus_versions(path)
-        if not vs:
-            raise FileNotFoundError(
-                f"no committed publication under {path!r}"
-            )
-        leftovers = [
-            v for v in commitlog.committed_versions(path) if v not in vs
-        ]
-        hashes = {_schema_note_hash(path, v) for v in vs}
-        rd = spark.read
-        if len(hashes) != 1:
-            rd = rd.option("mergeSchema", True)
-        full = rd.parquet(*[os.path.join(path, f"v={v}") for v in vs])
+    ids_df, n_ids = None, 0
+
+    def build(inputs: list[int]) -> DataFrame:
+        nonlocal ids_df, n_ids
+        full = _union_versions(spark, os.path.join(root, _CORPUS), inputs)
         id_type = full.schema[id_col].dataType
         if frame_valued:
             ids_df = (
@@ -1264,14 +1179,11 @@ def retire_docs(
             )
             n_ids = len(ids)
         hint = n_ids <= _RETIRE_BROADCAST_CAP
-        kept = full.join(
+        return full.join(
             F.broadcast(ids_df) if hint else ids_df, id_col, "left_anti"
         )
-        _check_lease_generation(root, gen)
-        v = claim_versioned_write(kept, path)
-        _write_schema_note(kept, path, v)
-        with open(os.path.join(path, f"v={v}", _FOLDS_NOTE), "w") as f:
-            _json.dump(sorted(set(vs) | set(leftovers)), f)
+
+    def notes(v: int) -> None:
         if frame_valued:
             # CDC sample capped at 100k regardless of loser-set size
             sample = [
@@ -1280,7 +1192,8 @@ def retire_docs(
             ]
         else:
             sample = sorted(ids)[:100_000]
-        with open(os.path.join(path, f"v={v}", "_RETIRED.json"), "w") as f:
+        vdir = os.path.join(root, _CORPUS, f"v={v}")
+        with open(os.path.join(vdir, "_RETIRED.json"), "w") as f:
             _json.dump(
                 {"n": int(n_ids), "ids": sample,
                  "reason": "near_dup_reconciliation"},
@@ -1307,12 +1220,16 @@ def retire_docs(
             marker = {"corpus_version": int(v), "ids": list(ids)}
         with open(os.path.join(root, _RETIRE_PENDING), "w") as f:
             _json.dump(marker, f)
-        _check_lease_generation(root, gen)
-        commit_versioned(path, v)
-        for old in leftovers + vs:
-            shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
+
+    gen = acquire_ingest_lease(root) if lease else None
+    try:
+        # a predecessor retirement may have crashed mid-refold — finish
+        # it before folding again (its marker carries its own ids)
+        _heal_pending_retirement(spark, root, gen)
+        v = _fold_corpus(root, gen, build, notes)
         _refold_indexes_excluding(
-            spark, root, ids_df, gen, n_ids, broadcast_ids=hint
+            spark, root, ids_df, gen, n_ids,
+            broadcast_ids=n_ids <= _RETIRE_BROADCAST_CAP,
         )
         try:
             os.remove(os.path.join(root, _RETIRE_PENDING))
@@ -1358,29 +1275,21 @@ def _refold_indexes_excluding(
     gone, ADVICE r14). ``broadcast_ids=False`` drops the broadcast
     hint for degenerate loser sets (VERDICT r14 #5) and lets AQE plan
     the anti-joins; ``n_ids`` only labels the folds' corpus_digest."""
-    import shutil
-
-    from data_engineering_capstone_project__spark.sources import commitlog
-
-    def _keyed(df: DataFrame, key: str) -> DataFrame:
+    def _kept(df: DataFrame, key: str) -> DataFrame:
         out = ids_df.select(
             F.col(ids_df.columns[0])
             .cast(df.schema[key].dataType)
             .alias(key)
         )
-        return F.broadcast(out) if broadcast_ids else out
+        if broadcast_ids:
+            out = F.broadcast(out)
+        return df.join(out, key, "left_anti")
 
-    if _bm25_log_active(root):
-        bp = os.path.join(root, _BM25)
-        postings, bmeta = art.load_bm25_postings_log(spark, bp)
-        bvs = art.visible_artifact_versions(bp)
-        bleft = [
-            w for w in commitlog.committed_versions(bp) if w not in bvs
-        ]
-        pid = bmeta["id_col"]
-        kept_p = postings.join(_keyed(postings, pid), pid, "left_anti")
+    def exclude_postings(postings: DataFrame, meta: dict):
+        pid = meta["id_col"]
+        kept = _kept(postings, pid)
         agg = (
-            kept_p.groupBy(pid)
+            kept.groupBy(pid)
             .agg(F.first("dl").alias("dl"))
             .agg(F.count("*").alias("ntd"), F.sum("dl").alias("sdl"))
             .first()
@@ -1394,76 +1303,42 @@ def _refold_indexes_excluding(
             "n_tok_docs": int(agg["ntd"] or 0),
             "sum_dl": int(agg["sdl"] or 0),
         }
-        carried = {
-            k: val
-            for k, val in bmeta.items()
-            if k in ("batch_digest", "publish_version", "family")
-        }
         _check_lease_generation(root, gen)
-        art.save_bm25_postings(
-            kept_p,
-            bp,
-            id_col=pid,
-            n_term_buckets=bmeta["n_term_buckets"],
-            stats=stats,
-            corpus_digest=f"retired:{n_ids}",
-            extra_meta=carried,
-            precommit=lambda: _check_lease_generation(root, gen),
-            folds=sorted(set(bvs) | set(bleft)),
-        )
-        for old in bleft + bvs:
-            shutil.rmtree(
-                os.path.join(bp, f"v={old}"), ignore_errors=True
-            )
-    if _ivf_log_active(root):
+        return kept, {
+            **meta, "corpus_digest": f"retired:{n_ids}", "stats": stats,
+        }
+
+    def exclude_vectors(vectors: DataFrame, meta: dict):
         from data_engineering_capstone_project__spark.operators import (
             similarity as sim,
         )
 
-        ip = os.path.join(root, _IVF)
-        vectors, imeta = art.load_ivf_log(spark, ip)
-        ivs = art.visible_artifact_versions(ip)
-        ileft = [
-            w for w in commitlog.committed_versions(ip) if w not in ivs
-        ]
-        vid, vec_col, cell_col = (
-            imeta["id_col"], imeta["vec_col"], imeta["cell_col"],
-        )
-        kept_v = vectors.join(_keyed(vectors, vid), vid, "left_anti").drop(
-            cell_col
-        )
+        vec_col, cell_col = meta["vec_col"], meta["cell_col"]
+        kept = _kept(vectors, meta["id_col"]).drop(cell_col)
         cents, _ = art.load_centroids_by_digest(
-            spark, os.path.join(root, _IVF_CB), imeta["codebook_digest"]
+            spark, os.path.join(root, _IVF_CB), meta["codebook_digest"]
         )
         # re-assignment under the pinned codebook is deterministic, so
         # the kept rows land in exactly their stored cells — this is a
         # stats recomputation over the LOG's vectors, not a corpus
         # re-encode (cell_col threaded per ADVICE r13 #2)
         assigned, cell_stats = sim.ivf_assign_cells_with_stats(
-            kept_v, cents, vec_col=vec_col, cell_col=cell_col
+            kept, cents, vec_col=vec_col, cell_col=cell_col
         )
-        carried = {
-            k: val
-            for k, val in imeta.items()
-            if k in ("batch_digest", "publish_version", "family")
-        }
         _check_lease_generation(root, gen)
-        art.save_ivf_delta(
-            assigned,
-            ip,
-            id_col=vid,
-            vec_col=vec_col,
-            cell_col=cell_col,
-            codebook_digest=imeta["codebook_digest"],
-            cell_stats=cell_stats,
-            corpus_digest=f"retired:{n_ids}",
-            extra_meta=carried,
-            precommit=lambda: _check_lease_generation(root, gen),
-            folds=sorted(set(ivs) | set(ileft)),
-        )
-        for old in ileft + ivs:
-            shutil.rmtree(
-                os.path.join(ip, f"v={old}"), ignore_errors=True
+        return assigned, {
+            **meta, "corpus_digest": f"retired:{n_ids}",
+            "cell_stats": cell_stats,
+        }
+
+    for sub, active, exclude in (
+        (_BM25, _bm25_log_active, exclude_postings),
+        (_IVF, _ivf_log_active, exclude_vectors),
+    ):
+        if active(root):
+            art.fold_artifact_log(
+                spark, os.path.join(root, sub), exclude,
+                precommit=lambda: _check_lease_generation(root, gen),
             )
 
 
@@ -1498,8 +1373,6 @@ def _heal_pending_retirement(
     #5) instead of an inline id list."""
     import json as _json
     import shutil
-
-    from data_engineering_capstone_project__spark.sources import commitlog
 
     mpath = os.path.join(root, _RETIRE_PENDING)
     if not os.path.exists(mpath):
@@ -1567,8 +1440,6 @@ def _complete_dangling_tick(
     published-docs-only since r11, so recovery is golden-equal even
     under ``select_cfg``; unit-pinned with an injected crash +
     selection)."""
-    from data_engineering_capstone_project__spark.sources import commitlog
-
     corpus_path = os.path.join(root, _CORPUS)
     fp_meta = art.load_artifact_meta(os.path.join(root, _FP))
     bdg = fp_meta.get("batch_digest")
@@ -1786,7 +1657,6 @@ def _ingest_batch_impl(
     # were silently never published.) ``recover_ingest_tick`` exposes
     # the same completion standalone for operators restarting a loop
     # whose in-flight batch will never be resubmitted.
-    from data_engineering_capstone_project__spark.sources import commitlog
 
     corpus_path = os.path.join(root, _CORPUS)
     # heal an unfinished RETIREMENT first (ADVICE r13 medium): a
@@ -2164,8 +2034,6 @@ def append_published_raw(
     UNDECLARED root — any crash leaves that root unprobeable and the
     operator re-runs the reshard against a clean path, so no bespoke
     recovery is needed here. Returns the committed corpus version."""
-    from data_engineering_capstone_project__spark.sources import commitlog
-
     if _ARRIVAL not in rows.columns:
         raise ValueError(
             f"append_published_raw: rows must carry {_ARRIVAL!r} (the "
@@ -2268,16 +2136,16 @@ def compact_publication_log(
     (``version=k``) and ``snapshot_diff`` consumers must drain BEFORE
     compaction.
 
-    **Crash/race safety** (hardened r11): the fold is claimed
-    UNCOMMITTED with a ``_FOLDS`` note naming exactly the captured
-    input versions, and the commit marker is the single atomic switch
-    — readers (:func:`_visible_corpus_versions`) resolve either the
-    inputs (fold uncommitted) or the fold (inputs excluded by the
-    note), NEVER both, so a compactor that dies between its commit and
-    the physical deletes cannot double-count the union (the pre-r11
-    write-then-delete shape could — both the fold and its inputs were
-    committed until the deletes finished; the next compaction also
-    sweeps any such leftover directories). Compaction now also takes
+    **Crash/race safety** (hardened r11): the fold protocol
+    (``commitlog.fold``) claims the fold UNCOMMITTED with a ``_FOLDS``
+    note naming the captured input versions, and the commit marker is
+    the single atomic switch — readers (``commitlog.visible_versions``)
+    resolve either the inputs (fold uncommitted) or the fold (inputs
+    excluded by the note), NEVER both, so a compactor that dies between
+    its commit and the physical deletes cannot double-count the union
+    (the pre-r11 write-then-delete shape could — both the fold and its
+    inputs were committed until the deletes finished; the next fold
+    also deletes such subsumed directories). Compaction now also takes
     the ingest LEASE (``lease=False`` opts out for externally
     serialized callers): two racing compactors would otherwise each
     fold the same inputs into two committed copies — and a wrongful
@@ -2293,93 +2161,75 @@ def compact_publication_log(
     and never a version committed after the capture (which simply
     survives, so the union is preserved under any interleaving).
 
-    ``compact_indexes`` (default True) additionally folds the
-    fingerprint / MinHash index LOGS — one batch-sized delta version
-    per tick — into one version each via ``compact_artifact_log``
-    (distinct for the band rows, whose deltas may overlap buckets),
-    bounding version count and multi-path-scan fan-in alike. Returns
-    the compacted corpus version."""
-    import json as _json
-    import shutil
+    ``compact_indexes`` (default True) additionally folds every index
+    LOG the root maintains — fingerprints, MinHash bands, and the BM25
+    and IVF logs when present; one batch-sized delta version per tick
+    each — into one version each via ``compact_artifact_log`` (the
+    kind decides what the fold sums: BM25 scalars, IVF cell stats; band
+    rows fold distinct, since deltas may overlap buckets), bounding
+    version count and multi-path-scan fan-in alike. Returns the
+    compacted corpus version."""
+    def build(inputs: list[int]) -> DataFrame:
+        full = _union_versions(spark, os.path.join(root, _CORPUS), inputs)
+        return full if n_files is None else full.coalesce(n_files)
 
-    from data_engineering_capstone_project__spark.sources import commitlog
-
-    path = os.path.join(root, _CORPUS)
     gen = acquire_ingest_lease(root) if lease else None
     try:
         # an unfinished retirement must heal before its index logs are
         # folded (ADVICE r13 medium) — one existence check when clean
         _heal_pending_retirement(spark, root, gen)
-        vs = _visible_corpus_versions(path)
-        if not vs:
-            raise FileNotFoundError(
-                f"no committed publication under {path!r} — nothing to "
-                "compact"
-            )
-        # crash leftovers from an earlier compactor that died between
-        # its commit and its deletes: committed but fold-subsumed —
-        # invisible to every reader, safe to sweep now
-        leftovers = [
-            v for v in commitlog.committed_versions(path) if v not in vs
-        ]
-        # schema-evolution-aware: an evolved log (heterogeneous schema
-        # notes) must fold through a mergeSchema scan — a flat
-        # multi-path read would take one footer's schema and silently
-        # null-or-drop the others' columns depending on file listing
-        # order. The folded version carries the MERGED schema (and its
-        # note), so the log is homogeneous again after compaction.
-        hashes = {_schema_note_hash(path, v) for v in vs}
-        if len(hashes) == 1:
-            full = spark.read.parquet(
-                *[os.path.join(path, f"v={v}") for v in vs]
-            )
-        else:
-            full = spark.read.option("mergeSchema", True).parquet(
-                *[os.path.join(path, f"v={v}") for v in vs]
-            )
-        if n_files is not None:
-            full = full.coalesce(n_files)
-        # two-phase fold: claim + payload + notes, THEN the atomic
-        # commit switch (raises FencedVersionError if the lease was
-        # wrongfully broken mid-compaction — inputs stay untouched)
-        _check_lease_generation(root, gen)
-        v = claim_versioned_write(full, path)
-        _write_schema_note(full, path, v)
-        # the note names the leftovers TOO: a leftover L is only
-        # invisible via a PRIOR fold's note (some F1 in vs), and F1's
-        # directory is about to be GC'd below — if this compactor then
-        # crashes before removing L, the new fold's own note must still
-        # subsume L or it would become visible again alongside the fold
-        # (double-counting the union)
-        with open(os.path.join(path, f"v={v}", _FOLDS_NOTE), "w") as f:
-            _json.dump(sorted(set(vs) | set(leftovers)), f)
-        _check_lease_generation(root, gen)
-        commit_versioned(path, v)
-        # physical expiry is now pure garbage collection: the inputs
-        # are already invisible (fold committed + _FOLDS note).
-        # Leftovers first — belt-and-braces with the union note above:
-        # no delete ordering can strand a committed leftover without a
-        # surviving note that subsumes it.
-        for old in leftovers + vs:
-            shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
+        v = _fold_corpus(root, gen, build)
         if compact_indexes:
-            art.compact_artifact_log(spark, os.path.join(root, _FP), "fps")
-            art.compact_artifact_log(
-                spark, os.path.join(root, _MH), "bands", distinct=True
-            )
-            if _bm25_log_active(root):
-                # bespoke fold: the folded meta must carry the SUMMED
-                # scalars (N/avgdl inputs), which the generic log
-                # compactor would copy from the last delta
-                art.compact_bm25_postings(spark, os.path.join(root, _BM25))
-            if _ivf_log_active(root):
-                # bespoke fold too: summed per-cell drift stats + the
-                # latest tick markers must survive (recovery + trigger)
-                art.compact_ivf_log(spark, os.path.join(root, _IVF))
+            for sub in (_FP, _MH, _BM25, _IVF):
+                p = os.path.join(root, sub)
+                if commitlog.committed_versions(p):
+                    art.compact_artifact_log(spark, p)
         return v
     finally:
         if lease:
             release_ingest_lease(root, gen)
+
+
+def _union_versions(
+    spark: SparkSession, path: str, versions: list[int]
+) -> DataFrame:
+    """The union of the publication log's ``versions`` as one
+    multi-path scan. Schema-evolution-aware: an evolved log
+    (heterogeneous schema notes) reads through ``mergeSchema`` — a flat
+    multi-path read would take one footer's schema and silently
+    null-or-drop the others' columns depending on file listing order.
+    A fold of it carries the MERGED schema (and its note), so the log is
+    homogeneous again afterwards."""
+    rd = spark.read
+    if len({_schema_note_hash(path, v) for v in versions}) != 1:
+        rd = rd.option("mergeSchema", True)
+    return rd.parquet(*[os.path.join(path, f"v={v}") for v in versions])
+
+
+def _fold_corpus(root: str, gen: int | None, build, notes=None) -> int:
+    """Fold the publication log's visible versions into one version
+    holding ``build(inputs)`` through ``commitlog.fold``: claim and
+    write the payload, then its schema note, the folds note and
+    ``notes(v)`` (retirement's CDC note and intent marker), then the
+    atomic commit switch. The lease generation is checked before the
+    claim and again before the commit, so a compactor whose lease was
+    wrongfully broken mid-fold raises (``FencedVersionError`` on its
+    fenced claim) and the inputs stay untouched."""
+    path = os.path.join(root, _CORPUS)
+
+    def write(inputs: list[int], folds: list[int]) -> int:
+        full = build(inputs)
+        _check_lease_generation(root, gen)
+        v = claim_versioned_write(full, path)
+        _write_schema_note(full, path, v)
+        commitlog.note_folds(path, v, folds)
+        if notes is not None:
+            notes(v)
+        _check_lease_generation(root, gen)
+        commit_versioned(path, v)
+        return v
+
+    return commitlog.fold(path, write)
 
 
 def backfill_arrival_stamp(
@@ -2414,26 +2264,11 @@ def backfill_arrival_stamp(
     Returns ``(folded_version, max_round)`` — max_round is the
     largest stamp now present (the sharded wrapper seeds the round
     ledger with it so the next tick claims strictly later)."""
-    import json as _json
-    import shutil
-
-    from data_engineering_capstone_project__spark.sources import commitlog
-
     path = os.path.join(root, _CORPUS)
-    gen = acquire_ingest_lease(root) if lease else None
-    try:
-        _heal_pending_retirement(spark, root, gen)
-        vs = _visible_corpus_versions(path)
-        if not vs:
-            raise FileNotFoundError(
-                f"no committed publication under {path!r} — nothing to "
-                "backfill"
-            )
-        leftovers = [
-            v for v in commitlog.committed_versions(path) if v not in vs
-        ]
+
+    def build(inputs: list[int]) -> DataFrame:
         parts = []
-        for v in vs:
+        for v in inputs:
             df = spark.read.parquet(os.path.join(path, f"v={v}"))
             rnd = int(round_for_version(v)) if round_for_version else int(v)
             if _ARRIVAL in df.columns:
@@ -2449,15 +2284,12 @@ def backfill_arrival_stamp(
         full = parts[0]
         for p in parts[1:]:
             full = full.unionByName(p, allowMissingColumns=True)
-        _check_lease_generation(root, gen)
-        v = claim_versioned_write(full, path)
-        _write_schema_note(full, path, v)
-        with open(os.path.join(path, f"v={v}", _FOLDS_NOTE), "w") as f:
-            _json.dump(sorted(set(vs) | set(leftovers)), f)
-        _check_lease_generation(root, gen)
-        commit_versioned(path, v)
-        for old in leftovers + vs:
-            shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
+        return full
+
+    gen = acquire_ingest_lease(root) if lease else None
+    try:
+        _heal_pending_retirement(spark, root, gen)
+        v = _fold_corpus(root, gen, build)
         mx = (
             spark.read.parquet(os.path.join(path, f"v={v}"))
             .agg(F.max(F.col(_ARRIVAL).cast("long")))

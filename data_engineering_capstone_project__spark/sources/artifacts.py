@@ -41,11 +41,25 @@ refit when the corpus moved. This is advisory (a digest collision is
 
 Two READINGS of the same layout (round 9): the SNAPSHOT form
 (``load_artifact`` — each version fully replaces the last; fitted
-models) and the APPEND-LOG form (``load_artifact_log`` — every
-committed version is a delta, union-read as ONE multi-path scan;
-the ingest loop's dedup indexes, whose per-tick admission must cost
-O(batch), never O(index)). ``compact_artifact_log`` folds a log back
-to one version; ``expire_artifact_versions`` is retention for
+models) and the APPEND-LOG form (every visible version is a delta and
+readers union them; the ingest loop's indexes, whose per-tick
+admission must cost O(batch), never O(index)).
+
+Every append log is read by ONE reader and folded by ONE compactor.
+Both look the log's ``kind`` up in ``_LOG_KINDS``, which names what
+differs per kind: its part, the meta keys every version must agree on
+(a mixed log is refused), how per-version metas combine (an
+associative combine with identity ``{}``: the fingerprint and MinHash
+logs keep the latest meta, the BM25 log sums its scalars, the IVF log
+its per-cell stats and vector counts) and whether the part is
+directory-partitioned (then each version is read on its own and the
+reads are unioned, since a multi-path read of partitioned roots fails
+partition inference; otherwise the log is one multi-path scan whose
+schema comes from a footer). The compactor (:func:`fold_artifact_log`)
+writes the union and the combined meta as one version through the
+fold protocol of ``sources.commitlog`` (``commitlog.fold``); a caller
+may rewrite the rows and the meta on the way (the IVF refit, the
+retirement exclusion). ``commitlog.expire_versions`` is retention for
 snapshots ONLY — applying it to a log would delete content.
 """
 
@@ -55,6 +69,8 @@ import json
 import os
 import shutil
 from collections.abc import Callable
+from functools import reduce
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -68,10 +84,8 @@ __all__ = [
     "save_artifact",
     "load_artifact",
     "load_artifact_meta",
-    "list_artifact_versions",
-    "expire_artifact_versions",
-    "load_artifact_log",
     "compact_artifact_log",
+    "fold_artifact_log",
     "load_fingerprint_log",
     "load_minhash_log",
     "corpus_digest",
@@ -98,14 +112,10 @@ __all__ = [
     "save_ivf_delta",
     "load_ivf_log",
     "load_ivf_log_stats",
-    "compact_ivf_log",
     "load_centroids_by_digest",
 ]
 
 _META = "_META.json"
-# fold-subsumption note — same filename and protocol as the ingest
-# publication log's (plans/ingest.py), so operators see ONE idiom
-_FOLDS = "_FOLDS.json"
 
 
 def default_artifact_root() -> str:
@@ -185,10 +195,10 @@ def save_artifact(
     artifact log exactly as it was.
 
     ``folds`` (r12): version numbers this snapshot SUBSUMES — written
-    as a ``_FOLDS.json`` note before the commit, so the commit marker
-    is the single atomic switch from inputs-visible to fold-visible
-    (the publication-log compaction protocol, ``plans/ingest.py``).
-    Log readers resolve through :func:`visible_artifact_versions`.
+    as a ``_FOLDS.json`` note before the commit (``commitlog.fold``
+    passes them), so the commit marker is the single atomic switch from
+    inputs-visible to fold-visible. Log readers resolve through
+    ``commitlog.visible_versions``.
     """
     for name in parts:
         if not name or any(c in name for c in "/\\. "):
@@ -202,37 +212,11 @@ def save_artifact(
     with open(os.path.join(target, _META), "w") as f:
         json.dump({"parts": sorted(parts), **(meta or {})}, f)
     if folds:
-        with open(os.path.join(target, _FOLDS), "w") as f:
-            json.dump(sorted(set(int(v) for v in folds)), f)
+        commitlog.note_folds(path, n, folds)
     if precommit is not None:
         precommit()
     commitlog.commit_version(path, n)
     return n
-
-
-def _folds_note(path: str, n: int) -> list[int]:
-    """Versions that committed version ``n`` subsumes (empty for plain
-    deltas/snapshots)."""
-    try:
-        with open(os.path.join(path, f"v={n}", _FOLDS)) as f:
-            return [int(x) for x in json.load(f)]
-    except (OSError, ValueError):
-        return []
-
-
-def visible_artifact_versions(path: str) -> list[int]:
-    """Committed versions minus those a committed fold subsumes: the set
-    a LOG reader must union. Equal to ``commitlog.committed_versions``
-    except in the window between a compactor's fold commit and its
-    physical deletes (or after a compactor crash inside that window),
-    where the subsumed inputs are still on disk but must not be read —
-    double-counting folded postings/fingerprints would corrupt any
-    count-bearing log (BM25 tf/df) and waste scans on the rest."""
-    vs = commitlog.committed_versions(path)
-    folded: set[int] = set()
-    for v in vs:
-        folded.update(_folds_note(path, v))
-    return [v for v in vs if v not in folded]
 
 
 def _resolve_version(path: str, version: int | None) -> int:
@@ -265,119 +249,231 @@ def load_artifact(
     return parts, meta
 
 
-def list_artifact_versions(path: str) -> list[int]:
-    """Committed + orphan snapshot versions present under ``path``."""
-    return commitlog.all_versions(path)
-
-
 # ------------------------------------------------------ append-log form
 
 
-def load_artifact_log(
-    spark: SparkSession, path: str, part: str
-) -> tuple[DataFrame, dict]:
-    """APPEND-LOG reading of an artifact path: ``part`` union-read across
-    ALL committed versions as ONE multi-path parquet scan (plan size
-    flat in version count — the publication-log lesson, VERDICT r8 #1),
-    with the LATEST version's meta.
+def _latest(a: dict, b: dict) -> dict:
+    return {**a, **b}
 
-    The snapshot loaders (``load_artifact``) treat each version as a
-    full replacement; a LOG treats each version as a delta — what the
-    ingest loop's index admission writes (per-tick cost O(batch), never
-    O(index): rewriting the full index per tick is quadratic cumulative
-    I/O at corpus scale). Appenders must keep the meta consistent
-    across versions (the ingest tick threads the loaded config back
-    into every save).
 
-    Resolution is FOLDS-aware (r12): versions a committed compaction
-    fold subsumes are excluded even when a compactor crash left them
-    on disk — the union is exactly-once under any crash interleaving.
+def _sum_keys(a: dict, b: dict, keys: tuple[str, ...]) -> dict:
+    return {
+        k: int(a.get(k, 0)) + int(b.get(k, 0))
+        for k in keys
+        if k in a or k in b
+    }
 
-    The schema comes from the latest version's footer (``footer_schema``,
-    read on the driver): the version set grows every tick, so a cache
-    keyed on it never hits, and inferring would cost a Spark job per
-    read. Spark infers it only when the footer cannot give it."""
-    vs = visible_artifact_versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no committed version under {path!r}")
-    meta = load_artifact_meta(path, vs[-1])
-    paths = [os.path.join(path, f"v={v}", part) for v in vs]
-    schema = io.footer_schema(paths[-1])
+
+def _sum_bm25(a: dict, b: dict) -> dict:
+    stats = _sum_keys(
+        a.get("stats") or {}, b.get("stats") or {},
+        ("n_docs", "n_tok_docs", "sum_dl"),
+    )
+    return {**a, **b, "stats": stats}
+
+
+def _sum_ivf(a: dict, b: dict) -> dict:
+    cells = {
+        int(c): [int(n), float(q)] for c, n, q in a.get("cell_stats") or ()
+    }
+    for c, n, q in b.get("cell_stats") or ():
+        t = cells.setdefault(int(c), [0, 0.0])
+        t[0] += int(n)
+        t[1] += float(q)
+    return {
+        **a, **b,
+        "cell_stats": [[c, n, q] for c, (n, q) in sorted(cells.items())],
+        **_sum_keys(a, b, ("n_vectors", "n_null_vec")),
+    }
+
+
+class _LogKind(NamedTuple):
+    part: str
+    # meta keys every version must agree on; ``noun`` names the refusal
+    agree: tuple[str, ...]
+    noun: str
+    # folds per-version metas, oldest first: associative, identity {}
+    combine: Callable[[dict, dict], dict] = _latest
+    # directory-partitioned part: per-version reads, unioned by name
+    partitioned: bool = False
+    # deltas may overlap (band rows): a fold keeps distinct rows
+    distinct: bool = False
+
+
+_MH_LOG = _LogKind(
+    "bands", ("kind", "num_hashes", "bands", "shingle_k"), "banding",
+    distinct=True,
+)
+_LOG_KINDS = {
+    "fingerprints": _LogKind("fps", ("kind", "fp_col"), "fingerprint"),
+    "minhash_bands": _MH_LOG,
+    "minhash_docs": _MH_LOG,
+    "bm25_postings": _LogKind(
+        "postings", ("kind", "id_col", "n_term_buckets"), "posting",
+        _sum_bm25, partitioned=True,
+    ),
+    "ivf_vectors": _LogKind(
+        "vectors",
+        ("kind", "id_col", "vec_col", "cell_col", "codebook_digest"),
+        "codebook", _sum_ivf, partitioned=True,
+    ),
+}
+
+
+def _read_log(
+    spark: SparkSession | None,
+    paths: list[str],
+    kinds: tuple[str, ...],
+    versions: list[int] | None = None,
+) -> tuple[DataFrame | None, dict, list[int]]:
+    """THE append-log reader: ``(rows, meta, versions)`` over the
+    visible versions of every path in ``paths`` (or the pinned
+    ``versions`` of a single path). Every version's meta must agree
+    with the first version's on the kind's ``agree`` keys — a delta
+    appended with a different config (banding, bucket count, codebook,
+    fingerprint column) would union rows no probe can read correctly,
+    so the log is refused with the version named. ``meta`` folds every
+    version's meta with the kind's ``combine`` (V tiny JSON reads, no
+    scan). ``spark=None`` skips the scan (``rows`` is None).
+
+    Reads are fold-aware (``commitlog.visible_versions``): versions a
+    committed fold subsumes are excluded even when a crash left them on
+    disk, so the union is exactly-once under any crash interleaving.
+    An unpartitioned log is ONE multi-path scan (plan size flat in
+    version count) whose schema comes from the latest footer, read on
+    the driver — the version set grows every tick, so a cache keyed on
+    it never hits and inferring would cost a job per read."""
+    metas, files, want = [], [], None
+    for p in paths:
+        vs = versions or commitlog.visible_versions(p)
+        if not vs:
+            raise FileNotFoundError(f"no committed version under {p!r}")
+        ms = [load_artifact_meta(p, v) for v in vs]
+        if ms[-1].get("kind") not in kinds:
+            raise ValueError(
+                f"not a {'/'.join(kinds)} log: {p} ({ms[-1].get('kind')})"
+            )
+        kind = _LOG_KINDS[ms[-1]["kind"]]
+        for v, m in zip(vs, ms):
+            got = {k: m.get(k) for k in kind.agree}
+            want = want or got
+            if got != want:
+                raise ValueError(
+                    f"version {v} of {p} was written with {got}, expected "
+                    f"{want} — a mixed-{kind.noun} log cannot be read"
+                )
+        metas += ms
+        files += [os.path.join(p, f"v={v}", kind.part) for v in vs]
+    meta = reduce(kind.combine, metas, {})
+    if spark is None:
+        return None, meta, vs
+    if kind.partitioned:
+        # a multi-path read of directory-PARTITIONED roots fails partition
+        # inference (CONFLICTING_DIRECTORY_STRUCTURES); the partition
+        # filter pushes into every branch and compaction bounds them
+        rows = [io.read_parquet_cached(spark, f) for f in files]
+        return reduce(DataFrame.unionByName, rows), meta, vs
+    schema = io.footer_schema(files[-1])
     if schema is None:
-        return io.read_parquet_cached(spark, *paths), meta
-    return spark.read.schema(schema).parquet(*paths), meta
+        return io.read_parquet_cached(spark, *files), meta, vs
+    return spark.read.schema(schema).parquet(*files), meta, vs
 
 
-def compact_artifact_log(
+def fold_artifact_log(
     spark: SparkSession,
     path: str,
-    part: str,
-    distinct: bool = False,
-    n_files: int | None = None,
+    rewrite: Callable[[DataFrame, dict], tuple[DataFrame, dict]] | None = None,
+    label: str = "compacted",
+    precommit=None,
 ) -> int:
-    """Fold every committed version of an append-log artifact into ONE
-    new version holding the union (optionally ``distinct`` — for logs
-    whose deltas may overlap, e.g. (band, bucket) rows) and remove
-    exactly the captured inputs. Same concurrency discipline as the
-    publication-log compactor: the version set is captured once, the
-    write unions exactly those versions, and expiry removes exactly
-    those versions — a delta committed after the capture survives and
-    the union is preserved under any interleaving. Returns the
-    compacted version.
+    """THE append-log compactor: fold every visible version into ONE
+    version holding their union (distinct for kinds whose deltas may
+    overlap) with the combined meta, through ``commitlog.fold``.
+    Returns the fold's version.
 
-    Crash-safe since r12 via the ``folds`` note: the fold commits with
-    a ``_FOLDS.json`` naming every subsumed input (captured visible
-    versions AND crash leftovers from a prior compactor, whose own
-    notes are about to be GC'd), so a crash anywhere between the commit
-    and the deletes never double-counts the union; deletes run
-    leftovers-first as belt-and-braces."""
-    vs = visible_artifact_versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no committed version under {path!r}")
-    leftovers = [
-        v for v in commitlog.committed_versions(path) if v not in vs
-    ]
-    meta = load_artifact_meta(path, vs[-1])
-    df = spark.read.parquet(
-        *[os.path.join(path, f"v={v}", part) for v in vs]
+    The folded meta carries every key of the combined meta: the tick
+    markers (``batch_digest``/``publish_version`` — dangling-tick
+    recovery compares the log's latest ``batch_digest``, and a fold
+    that dropped it would append a recovered delta again) and the
+    kind's combined sums (the BM25 scalars, the IVF cell stats,
+    ``n_vectors`` and ``n_null_vec``). Two keys are restamped: the
+    retention ``family`` is pinned from the pre-fold name and meta
+    (ADVICE r12 #4: the digest restamp erases the only way to infer
+    it), and ``corpus_digest`` becomes ``<label>:<inputs>`` — the
+    latest delta's digest describes that delta, not the union, so no
+    ``is_current`` check may trust the fold as current for it.
+
+    ``rewrite(rows, meta)`` may replace both before the write (the IVF
+    refit re-assigns cells, the retirement exclusion anti-joins ids);
+    the version is written through the kind's saver, so the part
+    layout (partitions, the flat zero-row version) is the saver's.
+    ``precommit`` runs just before the commit marker (lease fencing)."""
+    name = os.path.basename(os.path.normpath(path))
+
+    def write(inputs: list[int], folds: list[int]) -> int:
+        rows, meta, _ = _read_log(spark, [path], tuple(_LOG_KINDS), inputs)
+        if _LOG_KINDS[meta["kind"]].distinct:
+            rows = rows.distinct()
+        meta.pop("parts", None)
+        meta.setdefault("family", _artifact_family(name, meta))
+        if "corpus_digest" in meta:
+            meta["corpus_digest"] = f"{label}:{len(inputs)}"
+        if rewrite is not None:
+            rows, meta = rewrite(rows, meta)
+        return _save_log_version(path, rows, meta, folds, precommit)
+
+    return commitlog.fold(path, write)
+
+
+def compact_artifact_log(spark: SparkSession, path: str) -> int:
+    """Fold an append log to one version: :func:`fold_artifact_log`
+    with no rewrite."""
+    return fold_artifact_log(spark, path)
+
+
+def _save_log_version(
+    path: str, rows: DataFrame, meta: dict, folds: list[int], precommit
+) -> int:
+    """Write a folded log version through its kind's saver. The saver
+    is looked up by name at call time, so a replaced module attribute
+    (a fault injected into ``save_bm25_postings``, say) is the one
+    called."""
+    def rest(*own: str) -> dict:
+        return {k: v for k, v in meta.items() if k not in own}
+
+    if meta["kind"] == "bm25_postings":
+        return save_bm25_postings(
+            rows, path, id_col=meta["id_col"],
+            n_term_buckets=meta["n_term_buckets"], stats=meta["stats"],
+            corpus_digest=meta["corpus_digest"],
+            extra_meta=rest(
+                "kind", "id_col", "n_term_buckets", "stats", "corpus_digest"
+            ),
+            precommit=precommit, folds=folds,
+        )
+    if meta["kind"] == "ivf_vectors":
+        return save_ivf_delta(
+            rows, path, id_col=meta["id_col"], vec_col=meta["vec_col"],
+            cell_col=meta["cell_col"],
+            codebook_digest=meta["codebook_digest"],
+            cell_stats=meta["cell_stats"],
+            corpus_digest=meta["corpus_digest"],
+            extra_meta=rest(
+                "kind", "id_col", "vec_col", "cell_col", "codebook_digest",
+                "n_vectors", "cell_stats", "corpus_digest",
+            ),
+            precommit=precommit, folds=folds,
+        )
+    part = _LOG_KINDS[meta["kind"]].part
+    return save_artifact(
+        path, {part: rows}, meta, precommit=precommit, folds=folds
     )
-    if distinct:
-        df = df.distinct()
-    if n_files is not None:
-        df = df.coalesce(n_files)
-    out_meta = {k: m for k, m in meta.items() if k != "parts"}
-    # pin the retention FAMILY before the digest restamp below erases
-    # the only way to infer it from the name (ADVICE r12 #4): computed
-    # from the pre-compaction name+meta, carried in the folded meta, so
-    # sweep_stale_artifacts groups the compacted log with its digest-
-    # keyed siblings exactly — no regex inference on restamped names
-    out_meta.setdefault(
-        "family",
-        _artifact_family(os.path.basename(os.path.normpath(path)), meta),
-    )
-    if "corpus_digest" in out_meta:
-        # the latest delta's digest describes THAT delta's source frame,
-        # not the compacted union — re-stamping it verbatim would let an
-        # is_current-style consumer wrongly trust the folded artifact as
-        # current for that frame. Stamp a value that can never match a
-        # real digest, forcing staleness checks to refit.
-        out_meta["corpus_digest"] = f"compacted:{len(vs)}"
-    v = save_artifact(
-        path, {part: df}, out_meta, folds=sorted(set(vs) | set(leftovers))
-    )
-    for old in leftovers + vs:
-        shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
-    return v
 
 
 def load_fingerprint_log(spark: SparkSession, path: str) -> DataFrame:
-    """Union-read a fingerprint-index LOG (bootstrap + per-tick deltas)."""
-    df, meta = load_artifact_log(spark, path, "fps")
-    if meta.get("kind") != "fingerprints":
-        raise ValueError(
-            f"not a fingerprint artifact: {path} ({meta.get('kind')})"
-        )
-    return df
+    """Union-read a fingerprint-index LOG (bootstrap + per-tick deltas);
+    every version must agree on (kind, fp_col)."""
+    return _read_log(spark, [path], ("fingerprints",))[0]
 
 
 def load_minhash_log(
@@ -390,46 +486,12 @@ def load_minhash_log(
     Every version's (kind, num_hashes, bands, shingle_k) must AGREE —
     a delta appended with different banding would union rows whose
     band hashes can never collide with a correctly-configured probe
-    (silent recall loss, the r8 #3 failure class), so the loader
-    verifies all metas (V small JSON reads, trivial next to the scan)
-    and refuses a mixed log."""
-    df, meta = load_artifact_log(spark, path, "bands")
-    if meta.get("kind") not in ("minhash_bands", "minhash_docs"):
-        raise ValueError(
-            f"not a minhash artifact: {path} ({meta.get('kind')})"
-        )
-    keys = ("kind", "num_hashes", "bands", "shingle_k")
-    want = {k: meta.get(k) for k in keys}
-    for v in visible_artifact_versions(path):
-        m = load_artifact_meta(path, v)
-        got = {k: m.get(k) for k in keys}
-        if got != want:
-            raise ValueError(
-                f"load_minhash_log: version {v} of {path} was written "
-                f"with {got}, latest is {want} — a mixed-banding log "
-                "cannot be probed; re-bootstrap or compact from a "
-                "consistent source"
-            )
-    return df, meta
-
-
-def expire_artifact_versions(path: str, keep: int = 1) -> list[int]:
-    """Retention: drop old versions, keeping the newest ``keep`` committed
-    ones (the resolved snapshot always survives; versions without a
-    ``_COMMITTED`` marker belong to in-flight writers and are never
-    touched)."""
-    if keep < 1:
-        raise ValueError("keep must be >= 1")
-    committed = commitlog.committed_versions(path)
-    if not committed:
-        raise FileNotFoundError(f"no committed version under {path!r}")
-    keep_set = set(sorted(committed, reverse=True)[:keep]) | {committed[-1]}
-    removed = []
-    for v in committed:
-        if v not in keep_set:
-            shutil.rmtree(os.path.join(path, f"v={v}"))
-            removed.append(v)
-    return removed
+    (silent recall loss, the r8 #3 failure class), so a mixed log is
+    refused."""
+    rows, meta, _ = _read_log(
+        spark, [path], ("minhash_bands", "minhash_docs")
+    )
+    return rows, meta
 
 
 def _artifact_family(dirname: str, meta: dict) -> str:
@@ -797,7 +859,7 @@ def load_bm25_postings_log(
     ``meta['totals']`` carries the SUMMED scalars over every visible
     version (``n_docs``, ``n_tok_docs``, ``sum_dl`` — exact integers,
     V tiny JSON reads, no scan) and ``meta['n_term_buckets']`` the
-    layout's bucket count. Verifies every version agrees on
+    layout's bucket count. Every version must agree on
     (kind, id_col, n_term_buckets) — a mixed log would prune with the
     wrong hash or mis-attribute documents, so it is refused.
 
@@ -809,105 +871,8 @@ def load_bm25_postings_log(
     paths = [path] if isinstance(path, str) else list(path)
     if not paths:
         raise ValueError("load_bm25_postings_log: no paths")
-    want = None
-    totals = {"n_docs": 0, "n_tok_docs": 0, "sum_dl": 0}
-    dfs = []
-    meta = None
-    keys = ("kind", "id_col", "n_term_buckets")
-    for p in paths:
-        vs = visible_artifact_versions(p)
-        if not vs:
-            raise FileNotFoundError(f"no committed version under {p!r}")
-        meta = load_artifact_meta(p, vs[-1])
-        if meta.get("kind") != "bm25_postings":
-            raise ValueError(
-                f"not a bm25_postings artifact: {p} ({meta.get('kind')})"
-            )
-        if want is None:
-            want = {k: meta.get(k) for k in keys}
-        for v in vs:
-            m = load_artifact_meta(p, v)
-            got = {k: m.get(k) for k in keys}
-            if got != want:
-                raise ValueError(
-                    f"load_bm25_postings_log: version {v} of {p} was "
-                    f"written with {got}, expected {want} — a mixed "
-                    "posting log cannot be probed"
-                )
-            s = m.get("stats") or {}
-            for k in totals:
-                totals[k] += int(s.get(k, 0))
-        # per-version reads unioned, NOT one multi-path scan: a
-        # multi-path read of directory-PARTITIONED roots fails partition
-        # inference (CONFLICTING_DIRECTORY_STRUCTURES). The _tb
-        # partition filter pushes into every branch identically, and
-        # compaction bounds the branch count, so the plan stays small
-        # where it matters.
-        dfs.extend(
-            io.read_parquet_cached(spark, os.path.join(p, f"v={v}", "postings"))
-            for v in vs
-        )
-    df = dfs[0]
-    for d in dfs[1:]:
-        df = df.unionByName(d)
-    out = dict(meta)
-    out["totals"] = totals
-    return df, out
-
-
-def compact_bm25_postings(
-    spark: SparkSession, path: str, n_files: int | None = None
-) -> int:
-    """Fold a BM25 posting log's visible versions into ONE — the
-    folded version's meta carries the SUMMED scalars (the generic
-    :func:`compact_artifact_log` would copy the LAST delta's scalars,
-    silently shrinking N/avgdl). Crash-safe via the ``folds`` note
-    (commit is the atomic visibility switch; deletes are pure GC), so
-    a probe straddling a compactor crash still sees the exact union."""
-    vs = visible_artifact_versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no committed version under {path!r}")
-    leftovers = [
-        v for v in commitlog.committed_versions(path) if v not in vs
-    ]
-    df, meta = load_bm25_postings_log(spark, path)
-    if n_files is not None:
-        df = df.coalesce(n_files)
-    # carry every NON-structural meta key from the latest delta — the
-    # same convention as compact_artifact_log. In particular the tick
-    # markers (batch_digest / publish_version) MUST survive the fold:
-    # dangling-tick recovery decides "is this tick's bm25 delta
-    # present?" by comparing the log's latest batch_digest, and a fold
-    # that dropped it would make recovery append the delta AGAIN —
-    # doubled tf/df/N for the recovered docs, permanently (review r12).
-    carried = {
-        k: val
-        for k, val in meta.items()
-        if k
-        not in (
-            "parts", "kind", "id_col", "n_term_buckets", "stats",
-            "corpus_digest", "totals",
-        )
-    }
-    # pin the retention family across the digest restamp (ADVICE r12
-    # #4) — same convention as compact_artifact_log
-    carried.setdefault(
-        "family",
-        _artifact_family(os.path.basename(os.path.normpath(path)), meta),
-    )
-    v = save_bm25_postings(
-        df,
-        path,
-        id_col=meta["id_col"],
-        n_term_buckets=meta["n_term_buckets"],
-        stats=meta["totals"],
-        corpus_digest=f"compacted:{len(vs)}",
-        extra_meta=carried,
-        folds=sorted(set(vs) | set(leftovers)),
-    )
-    for old in leftovers + vs:
-        shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
-    return v
+    rows, meta, _ = _read_log(spark, paths, ("bm25_postings",))
+    return rows, {**meta, "totals": dict(meta["stats"])}
 
 
 # --------------------------------------------------- IVF vector delta log
@@ -1008,119 +973,31 @@ def save_ivf_delta(
 def load_ivf_log(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, dict]:
-    """Union-read an IVF vector LOG: ``(vectors, meta)`` where
-    ``meta['cell_totals']`` folds every visible version's per-cell
-    ``(count, qerr_sum)`` (V tiny JSON reads, zero scans) and
-    ``meta['n_vectors']`` their total. Refuses a log whose versions
-    disagree on (kind, id_col, vec_col, cell_col, codebook_digest) —
-    mixed-codebook cells would probe the wrong directories silently.
-
-    Per-version reads are unioned rather than one multi-path scan
-    (directory-partitioned roots fail multi-path partition inference);
-    the probe's cell filter pushes into every branch identically and
-    compaction bounds the branch count."""
-    meta, vs = load_ivf_log_stats(path)
-    dfs = [
-        io.read_parquet_cached(spark, os.path.join(path, f"v={v}", "vectors"))
-        for v in vs
-    ]
-    df = dfs[0]
-    for d in dfs[1:]:
-        df = df.unionByName(d)
-    return df, meta
+    """Union-read an IVF vector LOG: ``(vectors, meta)`` with the meta
+    of :func:`load_ivf_log_stats`. Every version must agree on (kind,
+    id_col, vec_col, cell_col, codebook_digest) — mixed-codebook cells
+    would probe the wrong directories silently, so the log is refused
+    (a refit writes a fold, never a mixed append)."""
+    rows, meta, _ = _read_log(spark, [path], ("ivf_vectors",))
+    return rows, _with_cell_totals(meta)
 
 
 def load_ivf_log_stats(path: str) -> tuple[dict, list[int]]:
     """The SCAN-FREE half of :func:`load_ivf_log`: fold every visible
-    version's meta note — per-cell ``(count, qerr_sum)`` totals,
-    ``n_vectors``, consistency validation — without touching a parquet
-    file. This is what lets the ingest tick evaluate the drift/refit
-    trigger EVERY tick at O(versions) tiny-JSON cost (VERDICT r12 #5);
-    ``operators.similarity.fold_ivf_cell_stats`` turns the totals into
-    the ``ivf_drift_stats`` dict. Returns ``(meta, versions)``."""
-    vs = visible_artifact_versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no committed version under {path!r}")
-    keys = ("kind", "id_col", "vec_col", "cell_col", "codebook_digest")
-    want = None
-    meta = load_artifact_meta(path, vs[-1])
-    if meta.get("kind") != "ivf_vectors":
-        raise ValueError(
-            f"not an ivf_vectors artifact: {path} ({meta.get('kind')})"
-        )
-    totals: dict[int, list] = {}
-    n_total = 0
-    for v in vs:
-        m = load_artifact_meta(path, v)
-        got = {k: m.get(k) for k in keys}
-        if want is None:
-            want = got
-        elif got != want:
-            raise ValueError(
-                f"load_ivf_log: version {v} of {path} was written with "
-                f"{got}, expected {want} — a mixed-codebook log cannot "
-                "be probed (refit writes a fold, never a mixed append)"
-            )
-        for c, n, q in m.get("cell_stats") or ():
-            t = totals.setdefault(int(c), [0, 0.0])
-            t[0] += int(n)
-            t[1] += float(q)
-        n_total += int(m.get("n_vectors", 0))
-    out = dict(meta)
-    out["cell_totals"] = {c: tuple(t) for c, t in totals.items()}
-    out["n_vectors"] = n_total
-    return out, vs
+    version's meta note — per-cell ``(count, qerr_sum)`` totals as
+    ``meta['cell_totals']``, ``n_vectors``, consistency validation —
+    without touching a parquet file. This is what lets the ingest tick
+    evaluate the drift/refit trigger EVERY tick at O(versions)
+    tiny-JSON cost (VERDICT r12 #5); ``operators.similarity.
+    fold_ivf_cell_stats`` turns the totals into the ``ivf_drift_stats``
+    dict. Returns ``(meta, versions)``."""
+    _, meta, vs = _read_log(None, [path], ("ivf_vectors",))
+    return _with_cell_totals(meta), vs
 
 
-def compact_ivf_log(
-    spark: SparkSession, path: str, n_files: int | None = None
-) -> int:
-    """Fold an IVF vector log's visible versions into ONE — bespoke
-    like :func:`compact_bm25_postings`: the folded meta must carry the
-    SUMMED per-cell stats (the drift fold's inputs) and the latest
-    tick markers (dangling-tick recovery compares the log's
-    ``batch_digest``), which the generic log compactor would copy from
-    the last delta alone. Crash-safe via the ``folds`` note."""
-    vs = visible_artifact_versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no committed version under {path!r}")
-    leftovers = [
-        v for v in commitlog.committed_versions(path) if v not in vs
-    ]
-    df, meta = load_ivf_log(spark, path)
-    if n_files is not None:
-        df = df.coalesce(n_files)
-    carried = {
-        k: val
-        for k, val in meta.items()
-        if k
-        not in (
-            "parts", "kind", "id_col", "vec_col", "cell_col",
-            "codebook_digest", "n_vectors", "cell_stats",
-            "corpus_digest", "cell_totals",
-        )
-    }
-    carried.setdefault(
-        "family",
-        _artifact_family(os.path.basename(os.path.normpath(path)), meta),
-    )
-    v = save_ivf_delta(
-        df,
-        path,
-        id_col=meta["id_col"],
-        vec_col=meta["vec_col"],
-        cell_col=meta["cell_col"],
-        codebook_digest=meta["codebook_digest"],
-        cell_stats=[
-            [c, n, q] for c, (n, q) in sorted(meta["cell_totals"].items())
-        ],
-        corpus_digest=f"compacted:{len(vs)}",
-        extra_meta=carried,
-        folds=sorted(set(vs) | set(leftovers)),
-    )
-    for old in leftovers + vs:
-        shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
-    return v
+def _with_cell_totals(meta: dict) -> dict:
+    cells = {int(c): (int(n), float(q)) for c, n, q in meta["cell_stats"]}
+    return {**meta, "cell_totals": cells}
 
 
 def load_centroids_by_digest(
@@ -1131,7 +1008,7 @@ def load_centroids_by_digest(
     cells even after a refit appended newer codebooks (newest-first
     scan; versions are few — one per refit). Returns
     ``(centroids, meta)``."""
-    vs = visible_artifact_versions(path)
+    vs = commitlog.visible_versions(path)
     for v in reversed(vs):
         m = load_artifact_meta(path, v)
         if m.get("codebook_digest") == digest:

@@ -39,6 +39,15 @@ of legacy pointer-protocol layouts (no markers anywhere, pointer
 present) keep working: the pointer bounds the committed set exactly as
 the old protocol defined it.
 
+LOGS (a version is a delta, readers union them — the ingest
+publication log and the append-log artifacts) add one more step, the
+FOLD (:func:`fold`): many versions become one new version whose
+``_FOLDS.json`` note names every version it subsumes. The note lands
+before the fold's commit marker, so the marker is the single atomic
+switch from inputs-visible to fold-visible; :func:`visible_versions` is
+the log reader's resolution (committed minus subsumed), and deleting
+the inputs afterwards is pure garbage collection.
+
 Spark's own parquet part files are committed by its FileOutputCommitter
 (rename-based locally; use an object-store committer — e.g. the S3A
 magic committer — there). This module only governs snapshot VISIBILITY:
@@ -48,11 +57,15 @@ part-file mechanics inside an uncommitted version are never observed.
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+from collections.abc import Callable
 
 _CLAIM = "_CLAIM"
 _COMMITTED = "_COMMITTED"
 _FENCED = "_FENCED"
+_FOLDS = "_FOLDS.json"
 LATEST = "LATEST"
 
 __all__ = [
@@ -66,6 +79,10 @@ __all__ = [
     "unfence_version",
     "is_fenced",
     "FencedVersionError",
+    "visible_versions",
+    "note_folds",
+    "fold",
+    "expire_versions",
 ]
 
 
@@ -273,3 +290,86 @@ def latest_version(path: str) -> int:
             "or nothing written)"
         )
     return vs[-1]
+
+
+def expire_versions(path: str, keep: int = 1) -> list[int]:
+    """SNAPSHOT retention: delete old version directories, keeping the
+    newest ``keep`` committed ones (the resolved snapshot always
+    survives). Versions without a ``_COMMITTED`` marker are in-flight
+    writers' claims — never touched. Never apply this to a LOG: there
+    every visible version is content, and only :func:`fold` may remove
+    one. Returns the versions removed."""
+    if keep < 1:
+        raise ValueError("keep must be >= 1")
+    committed = committed_versions(path)
+    if not committed:
+        raise FileNotFoundError(f"no committed version under {path!r}")
+    keep_set = set(sorted(committed, reverse=True)[:keep]) | {committed[-1]}
+    removed = []
+    for v in committed:
+        if v not in keep_set:
+            shutil.rmtree(os.path.join(path, f"v={v}"))
+            removed.append(v)
+    return removed
+
+
+def _folded_by(path: str, n: int) -> list[int]:
+    """Versions that committed version ``n`` subsumes (its ``_FOLDS.json``
+    note; empty for plain deltas and snapshots)."""
+    try:
+        with open(os.path.join(path, f"v={n}", _FOLDS)) as f:
+            return [int(x) for x in json.load(f)]
+    except (OSError, ValueError):
+        return []
+
+
+def visible_versions(path: str) -> list[int]:
+    """Committed versions minus those a committed fold subsumes: the set
+    a LOG reader must union. Equal to :func:`committed_versions` except
+    between a fold's commit and its deletes (or after a crash inside
+    that window), where the subsumed inputs are still on disk but must
+    not be read — double-counting folded rows would corrupt any
+    count-bearing log (BM25 tf/df, the publication log's union)."""
+    vs = committed_versions(path)
+    folded: set[int] = set()
+    for v in vs:
+        folded.update(_folded_by(path, v))
+    return [v for v in vs if v not in folded]
+
+
+def note_folds(path: str, n: int, folds: list[int]) -> None:
+    """Write claimed version ``n``'s ``_FOLDS.json`` note (the versions
+    it subsumes). Writers call it between the payload and the commit."""
+    with open(os.path.join(path, f"v={n}", _FOLDS), "w") as f:
+        json.dump(sorted(set(int(v) for v in folds)), f)
+
+
+def fold(path: str, write: Callable[[list[int], list[int]], int]) -> int:
+    """THE fold protocol of a log under ``path``; returns the fold's
+    version.
+
+    1. Capture the visible versions (the inputs) and the crash leftovers
+       — committed versions a prior fold subsumed whose directories a
+       crashed fold never deleted.
+    2. ``write(inputs, folds)`` claims a version, writes the union of
+       exactly ``inputs`` (plus its own notes), writes the note
+       ``note_folds(path, n, folds)``, runs its fencing checks and
+       commits; it returns the version. ``folds`` names the inputs AND
+       the leftovers: a leftover is invisible only through an older
+       fold's note, and that fold is an input about to be deleted — if
+       this fold then crashed before deleting the leftover, its own note
+       must still subsume it.
+    3. Delete the leftovers first, then the inputs: pure garbage
+       collection, since the commit already made them invisible.
+
+    A version committed after the capture is not an input and survives,
+    so the union is preserved under any interleaving; callers serialize
+    folds of one log (the ingest lease)."""
+    inputs = visible_versions(path)
+    if not inputs:
+        raise FileNotFoundError(f"no committed version under {path!r}")
+    leftovers = [v for v in committed_versions(path) if v not in inputs]
+    n = write(inputs, sorted(set(inputs) | set(leftovers)))
+    for old in leftovers + inputs:
+        shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
+    return n

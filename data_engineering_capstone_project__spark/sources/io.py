@@ -542,13 +542,6 @@ def commit_versioned(path: str, n: int) -> None:
         pass
 
 
-def list_versions(path: str) -> list[int]:
-    """Committed + orphan snapshot versions present under ``path``."""
-    from data_engineering_capstone_project__spark.sources import commitlog
-
-    return commitlog.all_versions(path)
-
-
 def read_versioned(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
     """Read the committed snapshot (or a pinned ``version`` — time
     travel). Raises if nothing was ever committed."""
@@ -601,35 +594,11 @@ def compact_versioned(spark: SparkSession, path: str, n_files: int = 1) -> int:
     Compaction is just another versioned write, so it inherits every
     guarantee above: readers never see a partial compaction, a crashed
     compactor leaves an unnamed orphan, and prior versions stay readable
-    for time travel until ``expire_versions``. Returns the new version.
+    for time travel until ``commitlog.expire_versions``. Returns the new
+    version.
     """
     df = read_versioned(spark, path)
     return write_versioned(df.coalesce(n_files), path)
-
-
-def expire_versions(path: str, keep: int = 1) -> list[int]:
-    """Retention: delete old snapshot directories, keeping the newest
-    ``keep`` committed versions (the resolved snapshot always survives).
-    Versions without a ``_COMMITTED`` marker are in-flight writers'
-    claims — never touched. Returns the versions removed.
-    """
-    import os
-    import shutil
-
-    from data_engineering_capstone_project__spark.sources import commitlog
-
-    if keep < 1:
-        raise ValueError("keep must be >= 1")
-    committed = commitlog.committed_versions(path)
-    if not committed:
-        raise FileNotFoundError(f"no committed version under {path!r}")
-    keep_set = set(sorted(committed, reverse=True)[:keep]) | {committed[-1]}
-    removed = []
-    for v in committed:
-        if v not in keep_set:
-            shutil.rmtree(os.path.join(path, f"v={v}"))
-            removed.append(v)
-    return removed
 
 
 def write_clustered(

@@ -49,3 +49,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="module")
+def fold_root(spark, sf_dir, tmp_path_factory):
+    """One ingest root whose every log holds two versions (see
+    ``_fold_cases.bootstrap``), built once per module. Tests that fold
+    copy it first."""
+    import _fold_cases
+
+    root = str(tmp_path_factory.mktemp("fold") / "root")
+    _fold_cases.bootstrap(spark, sf_dir, root)
+    return root

@@ -10,12 +10,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import _fold_cases
 from data_engineering_capstone_project__spark.operators import dedup, similarity, text
 from data_engineering_capstone_project__spark.plans.inspect import (
     executed_scan_metrics,
     partition_filters,
 )
 from data_engineering_capstone_project__spark.sources import artifacts as art
+from data_engineering_capstone_project__spark.sources import commitlog
 
 
 # ---------------------------------------------------------------- generic
@@ -37,7 +39,7 @@ def test_versions_bump_and_pin(spark, tmp_path):
     p = str(tmp_path / "a2")
     art.save_artifact(p, {"m": spark.range(1)}, {"tag": "first"})
     art.save_artifact(p, {"m": spark.range(5)}, {"tag": "second"})
-    assert art.list_artifact_versions(p) == [1, 2]
+    assert commitlog.all_versions(p) == [1, 2]
     assert art.load_artifact_meta(p)["tag"] == "second"
     parts, meta = art.load_artifact(spark, p, version=1)  # time travel
     assert meta["tag"] == "first" and parts["m"].count() == 1
@@ -110,7 +112,7 @@ def test_protocol_needs_no_rename_or_atomic_mkdir(spark, tmp_path, monkeypatch):
     assert art.load_artifact_meta(p)["i"] == 2
     assert art.save_artifact(p, {"m": spark.range(7)}, {"i": 9}) == 10
     # retention under the shim: committed-marker set, not pointer reads
-    removed = art.expire_artifact_versions(p, keep=1)
+    removed = commitlog.expire_versions(p, keep=1)
     assert removed == [1, 2, 3]
     parts, meta = art.load_artifact(spark, p)
     assert meta["i"] == 9 and parts["m"].count() == 7
@@ -151,7 +153,7 @@ def test_expire_keeps_latest(spark, tmp_path):
     p = str(tmp_path / "a4")
     for i in range(4):
         art.save_artifact(p, {"m": spark.range(i + 1)}, {"i": i})
-    removed = art.expire_artifact_versions(p, keep=2)
+    removed = commitlog.expire_versions(p, keep=2)
     assert removed == [1, 2]
     assert art.load_artifact_meta(p)["i"] == 3
     parts, _ = art.load_artifact(spark, p, version=3)
@@ -250,25 +252,25 @@ def test_bm25_topk_auto_weights(spark, sf_dir, tmp_path, monkeypatch):
     roots = os.listdir(str(tmp_path / "auto"))
     assert len(roots) == 1 and roots[0].startswith("bm25_")
     idx_path = os.path.join(str(tmp_path / "auto"), roots[0])
-    assert art.list_artifact_versions(idx_path) == [1]
+    assert commitlog.all_versions(idx_path) == [1]
     # steady state: same corpus content → reload, never a new version
     auto2 = rows(text.bm25_topk(docs, queries, k=5))
     assert auto2 == auto1
-    assert art.list_artifact_versions(idx_path) == [1]
+    assert commitlog.all_versions(idx_path) == [1]
     # a different corpus gets its own digest-keyed index
     text.bm25_topk(docs.filter(F.col("doc_id") < 50), queries, k=5)
     assert len(os.listdir(str(tmp_path / "auto"))) == 2
     # explicit index_path: k1/b mismatch in meta forces a refit version
     p = str(tmp_path / "pinned")
     text.bm25_topk(docs, queries, k=5, index_path=p)
-    assert art.list_artifact_versions(p) == [1]
+    assert commitlog.all_versions(p) == [1]
     text.bm25_topk(docs, queries, k=5, k1=2.0, index_path=p)
-    assert art.list_artifact_versions(p) == [1, 2]
+    assert commitlog.all_versions(p) == [1, 2]
     # ADVICE r8: ALTERNATING parameterizations at one explicit path must
     # reuse the matching OLDER version, not refit a new one per call
     alt_a = rows(text.bm25_topk(docs, queries, k=5, index_path=p))
     alt_b = rows(text.bm25_topk(docs, queries, k=5, k1=2.0, index_path=p))
-    assert art.list_artifact_versions(p) == [1, 2]
+    assert commitlog.all_versions(p) == [1, 2]
     assert alt_a == auto1
     assert rows(
         text.bm25_topk(docs, queries, k=5, k1=2.0, weights=None)
@@ -1280,6 +1282,31 @@ def test_minhash_log_refuses_mixed_banding(spark, sf_dir, tmp_path):
         art.load_minhash_log(spark, p)
 
 
+def test_fingerprint_log_refuses_mixed_fp_col(spark, sf_dir, tmp_path):
+    """A delta saved with another ``fp_col`` would be read through the
+    latest footer's column name, so the older versions' fingerprints
+    would read as NULL — the log loader refuses the mix and names the
+    version."""
+    from data_engineering_capstone_project__spark.streaming.stream import (
+        corpus_fingerprint_index,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    p = str(tmp_path / "fps")
+    art.save_fingerprint_index(
+        corpus_fingerprint_index(docs.filter(F.col("doc_id") < 50)), p
+    )
+    assert art.load_fingerprint_log(spark, p).count() > 0
+    art.save_fingerprint_index(
+        corpus_fingerprint_index(docs.filter(F.col("doc_id") >= 50))
+        .withColumnRenamed("fp", "fp2"),
+        p,
+        fp_col="fp2",
+    )
+    with pytest.raises(ValueError, match="version 2 of .*mixed-fingerprint"):
+        art.load_fingerprint_log(spark, p)
+
+
 def test_bounded_batch_probe_no_index_exchange(spark, sf_dir, tmp_path):
     """Round 9: with bounded_batch=True the exact-dedup probe scans the
     fp index with ZERO index-side exchanges (index SEMI broadcast(batch
@@ -1935,7 +1962,7 @@ def test_compaction_crash_before_expiry_never_double_counts(
 
     cpath = os.path.join(root, "corpus")
     committed = commitlog.committed_versions(cpath)
-    visible = ingest._visible_corpus_versions(cpath)
+    visible = commitlog.visible_versions(cpath)
     assert len(committed) == 3 and len(visible) == 1  # fold + 2 leftovers
     # the union is exactly-once despite the leftovers being committed
     assert sorted(_published_ids(spark, root)) == want
@@ -1943,7 +1970,7 @@ def test_compaction_crash_before_expiry_never_double_counts(
     ingest.compact_publication_log(spark, root, compact_indexes=False)
     assert sorted(_published_ids(spark, root)) == want
     left = commitlog.committed_versions(cpath)
-    assert ingest._visible_corpus_versions(cpath) == left  # no subsumed
+    assert commitlog.visible_versions(cpath) == left  # no subsumed
     assert len(left) == 1
 
 
@@ -2263,44 +2290,46 @@ def test_recover_ingest_tick_without_batch(spark, sf_dir, tmp_path, monkeypatch)
     assert s2.n_published == 0 and not s2.recovered
 
 
+@pytest.mark.parametrize("case", sorted(_fold_cases.CASES))
 def test_compaction_gc_crash_mid_delete_never_resurrects_leftovers(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, fold_root, tmp_path, monkeypatch, case
 ):
-    """ADVICE r11 (medium): the SECOND compaction's fold note must
-    subsume the leftovers too. Scenario: fold F1 is committed with
-    leftovers L (committed-but-subsumed via F1's _FOLDS note); the next
-    compactor commits F2, then crashes having deleted F1 but NOT L —
-    F1's note is gone, so unless F2's note names L, the leftovers
-    become visible again alongside F2 (double-counting the union)."""
+    """ADVICE r11 (medium): the SECOND fold's note must subsume the
+    leftovers too. Scenario: fold F1 is committed with leftovers L
+    (committed-but-subsumed via F1's _FOLDS note); the next fold commits
+    F2, then crashes having deleted F1 but NOT L — F1's note is gone, so
+    unless F2's note names L, the leftovers become visible again
+    alongside F2 (double-counting the union). Run for every user of the
+    shared fold: the publication log, the fp / mh / BM25 / IVF log
+    compactions, the IVF refit and the retirement refold."""
     import json as _json
     import shutil as _shutil
 
-    from data_engineering_capstone_project__spark.plans import ingest
     from data_engineering_capstone_project__spark.sources import commitlog
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    corpus = docs.filter(F.col("doc_id") < 100)
-    b1 = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 150))
+    fc = _fold_cases.CASES[case]
     root = str(tmp_path / "root")
-    ingest.init_ingest_indexes(spark, corpus, root)
-    p1, _ = ingest.ingest_batch(spark, b1, root)
-    p1.unpersist()
-    want = sorted(_published_ids(spark, root))
-    cpath = os.path.join(root, "corpus")
+    _shutil.copytree(fold_root, root)
+    want = fc.content(spark, root)
+    cpath = os.path.join(root, fc.log)
 
-    # first compaction crashes before ANY delete: fold F1 committed,
-    # v1+v2 are leftovers subsumed only via F1's note
+    # first fold crashes before ANY delete of its log: fold F1
+    # committed, both inputs are leftovers subsumed only via F1's note
     real_rmtree = _shutil.rmtree
-    monkeypatch.setattr(
-        _shutil, "rmtree", lambda *a, **k: (_ for _ in ()).throw(RuntimeError("c1"))
-    )
+
+    def crash_in_log(path, *a, **k):
+        if str(path).startswith(cpath + os.sep):
+            raise RuntimeError("c1")
+        return real_rmtree(path, *a, **k)
+
+    monkeypatch.setattr(_shutil, "rmtree", crash_in_log)
     with pytest.raises(RuntimeError, match="c1"):
-        ingest.compact_publication_log(spark, root, compact_indexes=False)
-    (f1,) = ingest._visible_corpus_versions(cpath)
+        fc.fold(spark, root)
+    (f1,) = commitlog.visible_versions(cpath)
     leftovers = [v for v in commitlog.committed_versions(cpath) if v != f1]
     assert len(leftovers) == 2
 
-    # second compaction: adversarial rmtree deletes ONLY F1's directory
+    # second fold: adversarial rmtree deletes ONLY F1's directory
     # (with its note), silently skips the leftovers, then crashes —
     # the exact worst-case interleaving of the GC loop
     def delete_f1_then_crash(path, *a, **k):
@@ -2310,17 +2339,17 @@ def test_compaction_gc_crash_mid_delete_never_resurrects_leftovers(
 
     monkeypatch.setattr(_shutil, "rmtree", delete_f1_then_crash)
     with pytest.raises(RuntimeError, match="c2"):
-        ingest.compact_publication_log(spark, root, compact_indexes=False)
+        fc.fold(spark, root)
     monkeypatch.setattr(_shutil, "rmtree", real_rmtree)
 
-    (f2,) = ingest._visible_corpus_versions(cpath)
+    (f2,) = commitlog.visible_versions(cpath)
     # F2's note subsumes the leftovers even though F1's note is gone
-    with open(os.path.join(cpath, f"v={f2}", ingest._FOLDS_NOTE)) as f:
+    with open(os.path.join(cpath, f"v={f2}", commitlog._FOLDS)) as f:
         assert set(_json.load(f)) >= set(leftovers)
-    assert sorted(_published_ids(spark, root)) == want  # exactly-once
-    # and the next compaction sweeps everything down to one version
-    ingest.compact_publication_log(spark, root, compact_indexes=False)
-    assert sorted(_published_ids(spark, root)) == want
+    assert fc.content(spark, root) == want  # exactly-once
+    # and the next fold sweeps everything down to one version
+    fc.fold(spark, root)
+    assert fc.content(spark, root) == want
     assert len(commitlog.committed_versions(cpath)) == 1
 
 
@@ -2532,7 +2561,7 @@ def test_artifact_family_explicit_and_tight_fallback(spark, sf_dir):
         art.save_bm25_postings(
             postings, p, n_term_buckets=8, stats=pstats, corpus_digest=dg
         )
-        art.compact_bm25_postings(spark, p)
+        art.compact_artifact_log(spark, p)
         meta = art.load_artifact_meta(p)
         assert meta["corpus_digest"].startswith("compacted:")
         assert meta["family"] == "famtest"

@@ -15,6 +15,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+import _fold_cases
 from _profile import prof
 
 from data_engineering_capstone_project__spark.operators import text
@@ -76,27 +77,32 @@ def test_compaction_content_identical_and_scalars_summed(
     d, path = _build_log(spark, sf_dir, tmp_path, splits=(250, 500))
     before = _rows(text.bm25_topk_incremental(spark, path, Q, k=10))
     _, meta_before = art.load_bm25_postings_log(spark, path)
-    art.compact_bm25_postings(spark, path)
+    art.compact_artifact_log(spark, path)
     after = _rows(text.bm25_topk_incremental(spark, path, Q, k=10))
     assert after == before
     _, meta_after = art.load_bm25_postings_log(spark, path)
     # the folded version's meta carries the SUMMED scalars — the
     # generic log compactor would have copied the last delta's
     assert meta_after["totals"] == meta_before["totals"]
-    assert len(art.visible_artifact_versions(path)) == 1
+    assert len(commitlog.visible_versions(path)) == 1
 
 
+@pytest.mark.parametrize("case", sorted(_fold_cases.CASES))
 def test_compaction_crash_before_deletes_never_double_counts(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, fold_root, tmp_path, monkeypatch, case
 ):
-    """Folds-note crash window: a compactor dying between its fold
-    commit and the physical deletes leaves every input on disk but
-    fold-subsumed — the probe's union (and its N/avgdl meta sums) must
-    stay exactly-once, or tf/df double and every score shifts."""
+    """Folds-note crash window: a fold dying between its commit and the
+    physical deletes leaves every input on disk but fold-subsumed — the
+    log's union (for BM25 the probe and its N/avgdl meta sums) must stay
+    exactly-once, or tf/df double and every score shifts. Run for every
+    user of the shared fold (``_fold_cases``)."""
     import shutil as _shutil
 
-    d, path = _build_log(spark, sf_dir, tmp_path, splits=(400,))
-    want = _rows(text.bm25_topk_incremental(spark, path, Q, k=10))
+    fc = _fold_cases.CASES[case]
+    root = str(tmp_path / "root")
+    _shutil.copytree(fold_root, root)
+    path = os.path.join(root, fc.log)
+    want = fc.content(spark, root)
 
     real = _shutil.rmtree
     monkeypatch.setattr(
@@ -104,17 +110,17 @@ def test_compaction_crash_before_deletes_never_double_counts(
         lambda *a, **k: (_ for _ in ()).throw(RuntimeError("crash")),
     )
     with pytest.raises(RuntimeError, match="crash"):
-        art.compact_bm25_postings(spark, path)
+        fc.fold(spark, root)
     monkeypatch.setattr(_shutil, "rmtree", real)
 
     # inputs still on disk + fold committed — resolution excludes them
     assert len(commitlog.committed_versions(path)) == 3
-    assert len(art.visible_artifact_versions(path)) == 1
-    assert _rows(text.bm25_topk_incremental(spark, path, Q, k=10)) == want
-    # next compaction sweeps the leftovers and stays exact
-    art.compact_bm25_postings(spark, path)
+    assert len(commitlog.visible_versions(path)) == 1
+    assert fc.content(spark, root) == want
+    # next fold sweeps the leftovers and stays exact
+    fc.fold(spark, root)
     assert len(commitlog.committed_versions(path)) == 1
-    assert _rows(text.bm25_topk_incremental(spark, path, Q, k=10)) == want
+    assert fc.content(spark, root) == want
 
 
 def test_mixed_bucket_layout_refused(spark, sf_dir, tmp_path):
@@ -161,7 +167,7 @@ def test_ingest_tick_maintains_bm25_log(spark, sf_dir, tmp_path):
     assert inc == _rows(text.bm25_topk(full, Q, k=10, weights=None))
 
     ingest.compact_publication_log(spark, root)
-    assert len(art.visible_artifact_versions(bm_path)) == 1
+    assert len(commitlog.visible_versions(bm_path)) == 1
     assert _rows(text.bm25_topk_incremental(spark, bm_path, Q, k=10)) == inc
 
 
@@ -324,7 +330,7 @@ def test_fuzz_incremental_equals_from_scratch(spark, tmp_path):
                 postings, path, stats=stats, n_term_buckets=8
             )
         if rng.random() < 0.5:
-            art.compact_bm25_postings(spark, path)
+            art.compact_artifact_log(spark, path)
         queries = {
             f"q{j}": " ".join(
                 rng.choice(vocab) for _ in range(rng.randint(1, 4))

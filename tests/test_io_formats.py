@@ -105,8 +105,10 @@ def test_versioned_sink_commit_and_time_travel(spark, tmp_path):
     is invisible to readers."""
     import os
 
+    from data_engineering_capstone_project__spark.sources.commitlog import (
+        all_versions,
+    )
     from data_engineering_capstone_project__spark.sources.io import (
-        list_versions,
         read_versioned,
         write_versioned,
     )
@@ -123,7 +125,7 @@ def test_versioned_sink_commit_and_time_travel(spark, tmp_path):
     os.mkdir(os.path.join(path, "v=3"))
     df1.write.mode("overwrite").parquet(os.path.join(path, "v=3"))
     assert read_versioned(spark, path).count() == 25  # still v2
-    assert list_versions(path) == [1, 2, 3]
+    assert all_versions(path) == [1, 2, 3]
     # next writer skips the claimed version number
     v4 = write_versioned(df1, path)
     assert v4 == 4 and read_versioned(spark, path).count() == 10
@@ -135,10 +137,12 @@ def test_versioned_compaction_and_retention(spark, tmp_path):
     but never the pointer target or newer in-flight claims."""
     import os
 
+    from data_engineering_capstone_project__spark.sources.commitlog import (
+        all_versions,
+        expire_versions,
+    )
     from data_engineering_capstone_project__spark.sources.io import (
         compact_versioned,
-        expire_versions,
-        list_versions,
         read_versioned,
         write_versioned,
     )
@@ -164,7 +168,7 @@ def test_versioned_compaction_and_retention(spark, tmp_path):
     os.mkdir(os.path.join(path, "v=9"))
     removed = expire_versions(path, keep=1)
     assert removed == [1, 2]
-    assert list_versions(path) == [3, 9]
+    assert all_versions(path) == [3, 9]
     assert read_versioned(spark, path).count() == 100
     with pytest.raises(Exception):
         read_versioned(spark, path, version=1)

@@ -176,6 +176,12 @@ def test_ivf_zero_vector_delta_and_null_vectors(spark, sf_dir, tmp_path):
     m2 = art.load_artifact_meta(f"{root}/ivf", st2.ivf_index_version)
     assert m2["n_vectors"] == 0
     assert m2["n_null_vec"] == n_pub > 0
+    # a fold sums n_null_vec over its inputs (as it sums n_vectors), and
+    # a refit fold carries the sum: only the NULL-vector tick had any
+    ingest.compact_publication_log(spark, root)
+    assert art.load_artifact_meta(f"{root}/ivf")["n_null_vec"] == n_pub
+    ingest.refit_ivf_index(spark, root, sample_rows=300, n_iter=4)
+    assert art.load_artifact_meta(f"{root}/ivf")["n_null_vec"] == n_pub
 
 
 def test_ivf_log_refuses_mixed_codebook(spark, sf_dir, tmp_path):

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from data_engineering_capstone_project__spark.operators import text as text_ops
 from data_engineering_capstone_project__spark.plans import ingest, shards
 from data_engineering_capstone_project__spark.sources import artifacts as art
+from data_engineering_capstone_project__spark.sources import commitlog
 
 
 def _docs(spark, sf_dir):
@@ -105,7 +106,7 @@ def test_retire_docs_frame_valued_over_broadcast_cap(
     _assert_surface_is_corpus(spark, root)
     # the CDC note records the true loser count, sample capped at 100k
     cpath = os.path.join(root, "corpus")
-    vs = ingest._visible_corpus_versions(cpath)
+    vs = commitlog.visible_versions(cpath)
     with open(os.path.join(cpath, f"v={max(vs)}", "_RETIRED.json")) as f:
         note = json.load(f)
     assert note["n"] == 1_250_010
@@ -358,7 +359,7 @@ def _strip_stamps(spark, shard_root_path):
     import shutil as _sh
 
     cpath = os.path.join(shard_root_path, "corpus")
-    for v in ingest._visible_corpus_versions(cpath):
+    for v in commitlog.visible_versions(cpath):
         vdir = os.path.join(cpath, f"v={v}")
         df = spark.read.parquet(vdir)
         if "_arrival_round" not in df.columns:

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from data_engineering_capstone_project__spark.operators import text as text_ops
 from data_engineering_capstone_project__spark.plans import ingest, shards
 from data_engineering_capstone_project__spark.sources import artifacts as art
+from data_engineering_capstone_project__spark.sources import commitlog
 
 
 def _docs(spark, sf_dir):
@@ -483,7 +484,7 @@ def test_stream_loop_reconcile_cadence(spark, sf_dir, tmp_path):
     # compaction DID run after the reconcile: one visible version/shard
     for s in range(2):
         cpath = os.path.join(shards.shard_root(sroot, s), "corpus")
-        assert len(ingest._visible_corpus_versions(cpath)) == 1
+        assert len(commitlog.visible_versions(cpath)) == 1
 
     import pytest as _pytest
 

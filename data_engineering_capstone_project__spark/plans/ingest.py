@@ -234,29 +234,16 @@ def init_ingest_indexes(
             os.path.join(root, _FP),
             corpus_digest=dg,
         )
-        if verify_jaccard_threshold is None:
-            art.save_minhash_index(
-                dedup.corpus_minhash_band_index(
-                    corpus, id_col, text_col, num_hashes, bands, shingle_k
-                ),
-                os.path.join(root, _MH),
-                num_hashes=num_hashes,
-                bands=bands,
-                shingle_k=shingle_k,
-                corpus_digest=dg,
-            )
-        else:
-            art.save_minhash_doc_index(
-                dedup.corpus_minhash_doc_index(
-                    corpus, id_col, text_col, num_hashes, bands, shingle_k
-                ),
-                os.path.join(root, _MH),
-                num_hashes=num_hashes,
-                bands=bands,
-                shingle_k=shingle_k,
-                jaccard_threshold=verify_jaccard_threshold,
-                corpus_digest=dg,
-            )
+        _save_mh_delta(
+            corpus, os.path.join(root, _MH),
+            {
+                "num_hashes": num_hashes, "bands": bands,
+                "shingle_k": shingle_k,
+                "jaccard_threshold": verify_jaccard_threshold,
+            },
+            verify_jaccard_threshold is not None, id_col, text_col,
+            corpus_digest=dg,
+        )
         if bm25_index:
             from data_engineering_capstone_project__spark.operators import (
                 text as text_ops,
@@ -743,6 +730,40 @@ def ingest_batch(
         )
     finally:
         release_ingest_lease(root, gen)
+
+
+def _save_mh_delta(
+    docs: DataFrame,
+    path: str,
+    cfg: dict,
+    verified: bool,
+    id_col: str,
+    text_col: str,
+    band_rows: DataFrame | None = None,
+    **save_kw,
+) -> int:
+    """Save the MinHash index delta of ``docs`` in the log's tier: the
+    id-carrying doc index (with ``cfg['jaccard_threshold']``) when
+    ``verified``, else the band index. ``cfg`` carries the banding
+    (``num_hashes``, ``bands``, ``shingle_k``); ``band_rows`` are the
+    docs' band rows when the caller has them; ``save_kw`` (digest, tick
+    meta, precommit) go to the saver, which is looked up on ``art`` at
+    call time, so a fault injected there is the one called."""
+    banding = (cfg["num_hashes"], cfg["bands"], cfg["shingle_k"])
+    if verified:
+        return art.save_minhash_doc_index(
+            dedup.corpus_minhash_doc_index(
+                docs, id_col, text_col, *banding, band_rows=band_rows
+            ),
+            path, *banding, jaccard_threshold=cfg["jaccard_threshold"],
+            **save_kw,
+        )
+    return art.save_minhash_index(
+        dedup.corpus_minhash_band_index(
+            docs, id_col, text_col, *banding, band_rows=band_rows
+        ),
+        path, *banding, **save_kw,
+    )
 
 
 def _append_bm25_delta(
@@ -1472,35 +1493,11 @@ def _complete_dangling_tick(
     if mh_latest.get("batch_digest") != bdg:
         rdg = f"delta:{art.corpus_digest(published, [id_col, text_col])}"
         tick_meta = {"batch_digest": bdg, "publish_version": pub_n}
-        if verified:
-            mh_v = art.save_minhash_doc_index(
-                dedup.corpus_minhash_doc_index(
-                    published, id_col, text_col,
-                    cfg["num_hashes"], cfg["bands"], cfg["shingle_k"],
-                ),
-                mh_path,
-                num_hashes=cfg["num_hashes"],
-                bands=cfg["bands"],
-                shingle_k=cfg["shingle_k"],
-                jaccard_threshold=cfg["jaccard_threshold"],
-                corpus_digest=rdg,
-                extra_meta=tick_meta,
-                precommit=lambda: _check_lease_generation(root, expected_gen),
-            )
-        else:
-            mh_v = art.save_minhash_index(
-                dedup.corpus_minhash_band_index(
-                    published, id_col, text_col,
-                    cfg["num_hashes"], cfg["bands"], cfg["shingle_k"],
-                ),
-                mh_path,
-                num_hashes=cfg["num_hashes"],
-                bands=cfg["bands"],
-                shingle_k=cfg["shingle_k"],
-                corpus_digest=rdg,
-                extra_meta=tick_meta,
-                precommit=lambda: _check_lease_generation(root, expected_gen),
-            )
+        mh_v = _save_mh_delta(
+            published, mh_path, cfg, verified, id_col, text_col,
+            corpus_digest=rdg, extra_meta=tick_meta,
+            precommit=lambda: _check_lease_generation(root, expected_gen),
+        )
     else:
         mh_v = commitlog.latest_version(mh_path)
     # same completion rule for the BM25 posting log (when maintained):
@@ -1937,33 +1934,10 @@ def _ingest_batch_impl(
     # payload
     pub_bands = band_rows.join(published.select(id_col), id_col, "left_semi")
     _check_lease_generation(root, expected_gen)
-    if verified:
-        mh_v = art.save_minhash_doc_index(
-            dedup.corpus_minhash_doc_index(
-                published, id_col, text_col, band_rows=pub_bands
-            ),
-            mh_path,
-            num_hashes=cfg["num_hashes"],
-            bands=cfg["bands"],
-            shingle_k=cfg["shingle_k"],
-            jaccard_threshold=cfg["jaccard_threshold"],
-            corpus_digest=mh_dg,
-            extra_meta=tick_meta,
-            precommit=fence,
-        )
-    else:
-        mh_v = art.save_minhash_index(
-            dedup.corpus_minhash_band_index(
-                published, id_col, text_col, band_rows=pub_bands
-            ),
-            mh_path,
-            num_hashes=cfg["num_hashes"],
-            bands=cfg["bands"],
-            shingle_k=cfg["shingle_k"],
-            corpus_digest=mh_dg,
-            extra_meta=tick_meta,
-            precommit=fence,
-        )
+    mh_v = _save_mh_delta(
+        published, mh_path, cfg, verified, id_col, text_col, pub_bands,
+        corpus_digest=mh_dg, extra_meta=tick_meta, precommit=fence,
+    )
     # incremental BM25 posting delta (VERDICT r11 #1) — published docs
     # only, same fencing as the dedup deltas; appended BEFORE the
     # publish commit so recovery's completion rule covers it
@@ -2067,37 +2041,10 @@ def append_published_raw(
             precommit=fence,
         )
         _check_lease_generation(root, gen)
-        if verified:
-            art.save_minhash_doc_index(
-                dedup.corpus_minhash_doc_index(
-                    body, id_col, text_col,
-                    int(mh_meta["num_hashes"]), int(mh_meta["bands"]),
-                    int(mh_meta["shingle_k"]),
-                ),
-                mh_path,
-                num_hashes=int(mh_meta["num_hashes"]),
-                bands=int(mh_meta["bands"]),
-                shingle_k=int(mh_meta["shingle_k"]),
-                jaccard_threshold=mh_meta.get("jaccard_threshold"),
-                corpus_digest=dg,
-                extra_meta=tick_meta,
-                precommit=fence,
-            )
-        else:
-            art.save_minhash_index(
-                dedup.corpus_minhash_band_index(
-                    body, id_col, text_col,
-                    int(mh_meta["num_hashes"]), int(mh_meta["bands"]),
-                    int(mh_meta["shingle_k"]),
-                ),
-                mh_path,
-                num_hashes=int(mh_meta["num_hashes"]),
-                bands=int(mh_meta["bands"]),
-                shingle_k=int(mh_meta["shingle_k"]),
-                corpus_digest=dg,
-                extra_meta=tick_meta,
-                precommit=fence,
-            )
+        _save_mh_delta(
+            body, mh_path, mh_meta, verified, id_col, text_col,
+            corpus_digest=dg, extra_meta=tick_meta, precommit=fence,
+        )
         if _bm25_log_active(root):
             _append_bm25_delta(
                 spark, root, body, id_col, text_col, dg, tick_meta, gen

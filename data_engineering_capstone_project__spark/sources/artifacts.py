@@ -45,20 +45,26 @@ models) and the APPEND-LOG form (every visible version is a delta and
 readers union them; the ingest loop's indexes, whose per-tick
 admission must cost O(batch), never O(index)).
 
-Every append log is read by ONE reader and folded by ONE compactor.
-Both look the log's ``kind`` up in ``_LOG_KINDS``, which names what
-differs per kind: its part, the meta keys every version must agree on
-(a mixed log is refused), how per-version metas combine (an
-associative combine with identity ``{}``: the fingerprint and MinHash
-logs keep the latest meta, the BM25 log sums its scalars, the IVF log
-its per-cell stats and vector counts) and whether the part is
-directory-partitioned (then each version is read on its own and the
-reads are unioned, since a multi-path read of partitioned roots fails
-partition inference; otherwise the log is one multi-path scan whose
-schema comes from a footer). The compactor (:func:`fold_artifact_log`)
-writes the union and the combined meta as one version through the
-fold protocol of ``sources.commitlog`` (``commitlog.fold``); a caller
-may rewrite the rows and the meta on the way (the IVF refit, the
+Every artifact kind is one row of ``_KINDS``, keyed by the meta's
+``kind``. A row names what differs per kind: its part names, the noun a
+refusal uses, the meta keys its loader hands back, and for the append
+logs the meta keys every version must agree on (a mixed log is
+refused), how per-version metas combine (an associative combine with
+identity ``{}``: the fingerprint and MinHash logs keep the latest meta,
+the BM25 log sums its scalars, the IVF log its per-cell stats and
+vector counts), the directory-partition column (``_tb`` for BM25, the
+meta's ``cell_col`` for IVF) and whether a fold keeps distinct rows.
+Every public saver is one call of :func:`_save`, which assembles the
+meta and owns the partitioned write (a zero-row delta is written flat);
+every public loader is one call of :func:`_load`, which checks the kind.
+Every append log is read by ONE reader (:func:`_read_log`; a
+partitioned log is read version by version and the reads are unioned,
+since a multi-path read of partitioned roots fails partition inference;
+otherwise the log is one multi-path scan whose schema comes from a
+footer) and folded by ONE compactor (:func:`fold_artifact_log`), which
+writes the union and the combined meta as one version through the fold
+protocol of ``sources.commitlog`` (``commitlog.fold``); a caller may
+rewrite the rows and the meta on the way (the IVF refit, the
 retirement exclusion). ``commitlog.expire_versions`` is retention for
 snapshots ONLY — applying it to a log would delete content.
 """
@@ -88,15 +94,22 @@ __all__ = [
     "fold_artifact_log",
     "load_fingerprint_log",
     "load_minhash_log",
+    "sweep_stale_artifacts",
+    "ConcurrentSweepError",
     "corpus_digest",
     "observe_digest",
+    "digest_count",
     "is_current",
     "save_bm25_index",
     "load_bm25_index",
+    "save_bm25_postings",
+    "load_bm25_postings_log",
     "save_pca_model",
     "load_pca_model",
     "save_centroids",
     "load_centroids",
+    "save_pq_codebooks",
+    "load_pq_codebooks",
     "save_fingerprint_index",
     "load_fingerprint_index",
     "save_bpe_model",
@@ -249,7 +262,7 @@ def load_artifact(
     return parts, meta
 
 
-# ------------------------------------------------------ append-log form
+# ------------------------------------------------------------ kind table
 
 
 def _latest(a: dict, b: dict) -> dict:
@@ -264,11 +277,11 @@ def _sum_keys(a: dict, b: dict, keys: tuple[str, ...]) -> dict:
     }
 
 
+_BM25_STATS = ("n_docs", "n_tok_docs", "sum_dl")
+
+
 def _sum_bm25(a: dict, b: dict) -> dict:
-    stats = _sum_keys(
-        a.get("stats") or {}, b.get("stats") or {},
-        ("n_docs", "n_tok_docs", "sum_dl"),
-    )
+    stats = _sum_keys(a.get("stats") or {}, b.get("stats") or {}, _BM25_STATS)
     return {**a, **b, "stats": stats}
 
 
@@ -287,37 +300,136 @@ def _sum_ivf(a: dict, b: dict) -> dict:
     }
 
 
-class _LogKind(NamedTuple):
-    part: str
-    # meta keys every version must agree on; ``noun`` names the refusal
-    agree: tuple[str, ...]
+def _term_buckets(meta: dict) -> str | None:
+    return "_tb" if "n_term_buckets" in meta else None
+
+
+class _Kind(NamedTuple):
+    # part names, in the order savers pass and loaders return the frames
+    parts: tuple[str, ...]
+    # names the kind in a loader's refusal: "not a <noun> artifact"
     noun: str
+    # meta keys the loader hands back; a fold passes them to the saver
+    config: tuple[str, ...] = ()
+    # append logs: meta keys every version must agree on, and what a
+    # log whose versions do not is called ("mixed-<mixed or noun>")
+    agree: tuple[str, ...] = ()
+    mixed: str = ""
     # folds per-version metas, oldest first: associative, identity {}
     combine: Callable[[dict, dict], dict] = _latest
-    # directory-partitioned part: per-version reads, unioned by name
-    partitioned: bool = False
+    # the first part's directory-partition column for a meta, if any;
+    # a partitioned log is read version by version, unioned by name
+    partition: Callable[[dict], str | None] | None = None
     # deltas may overlap (band rows): a fold keeps distinct rows
     distinct: bool = False
+    # the public saver a fold writes through (else it writes directly)
+    saver: str | None = None
 
 
-_MH_LOG = _LogKind(
-    "bands", ("kind", "num_hashes", "bands", "shingle_k"), "banding",
-    distinct=True,
-)
-_LOG_KINDS = {
-    "fingerprints": _LogKind("fps", ("kind", "fp_col"), "fingerprint"),
-    "minhash_bands": _MH_LOG,
-    "minhash_docs": _MH_LOG,
-    "bm25_postings": _LogKind(
-        "postings", ("kind", "id_col", "n_term_buckets"), "posting",
-        _sum_bm25, partitioned=True,
+_CENTROIDS = _Kind(("centroids",), "centroid")
+_BANDING = ("num_hashes", "bands", "shingle_k")
+_KINDS = {
+    "bm25": _Kind(
+        ("weights",), "bm25", ("n_term_buckets",), partition=_term_buckets
     ),
-    "ivf_vectors": _LogKind(
-        "vectors",
+    "bm25_postings": _Kind(
+        ("postings",), "posting", ("id_col", "n_term_buckets", "stats"),
+        ("kind", "id_col", "n_term_buckets"), combine=_sum_bm25,
+        partition=_term_buckets, saver="save_bm25_postings",
+    ),
+    "ivf_vectors": _Kind(
+        ("vectors",), "codebook",
+        ("id_col", "vec_col", "cell_col", "codebook_digest", "cell_stats"),
         ("kind", "id_col", "vec_col", "cell_col", "codebook_digest"),
-        "codebook", _sum_ivf, partitioned=True,
+        combine=_sum_ivf, partition=lambda meta: meta["cell_col"],
+        saver="save_ivf_delta",
     ),
+    "pca": _Kind(("components", "scalars"), "pca"),
+    "centroids": _CENTROIDS,
+    "ivf": _CENTROIDS,
+    "kmeans": _CENTROIDS,
+    "pq_codebooks": _Kind(("books",), "PQ codebook", ("m", "ksub", "dsub")),
+    "fingerprints": _Kind(
+        ("fps",), "fingerprint", ("fp_col",), ("kind", "fp_col")
+    ),
+    "bpe": _Kind(("merges",), "bpe"),
+    "unigram": _Kind(("pieces",), "unigram"),
+    "minhash_bands": _Kind(
+        ("bands",), "minhash", _BANDING, ("kind", *_BANDING), "banding",
+        distinct=True,
+    ),
+    "minhash_docs": _Kind(
+        ("bands",), "minhash doc-index", (*_BANDING, "jaccard_threshold"),
+        ("kind", *_BANDING), "banding", distinct=True,
+    ),
+    "dsir_ratio": _Kind(("ratio",), "dsir", ("n_buckets", "alpha", "salt")),
 }
+
+
+def _save(
+    kind: str,
+    path: str,
+    parts: tuple[DataFrame, ...],
+    corpus_digest: str | None = None,
+    extra_meta: dict | None = None,
+    precommit=None,
+    folds: list[int] | None = None,
+    n_rows: int | None = None,
+    **config,
+) -> int:
+    """THE saver: one version of ``kind`` through :func:`save_artifact`,
+    ``parts`` in the table's part order, meta ``kind``, ``config`` and
+    ``corpus_digest`` over ``extra_meta`` (a fold passes the whole
+    combined meta there, so the keys the saver computes win).
+
+    A partitioned kind's first part is written ~one file per partition
+    directory, not one per upstream partition (the probe's cost is
+    files opened). A part the caller knows to hold zero rows
+    (``n_rows=0``: a full-dup tick, a token-less or all-NULL-vector
+    batch) still needs its version for the tick marker, but a
+    partitionBy write of zero rows emits NO schema-bearing file, so it
+    is written flat — the log reader's unionByName aligns it, and an
+    empty scan prunes trivially."""
+    k = _KINDS[kind]
+    meta = {
+        **(extra_meta or {}), "kind": kind, **config,
+        "corpus_digest": corpus_digest,
+    }
+    named = dict(zip(k.parts, parts))
+    first = k.parts[0]
+    col = k.partition(meta) if k.partition else None
+    partition_by = None
+    if col is not None and n_rows == 0:
+        named[first] = named[first].coalesce(1)
+    elif col is not None:
+        named[first] = named[first].repartition(F.col(col))
+        partition_by = {first: [col]}
+    return save_artifact(path, named, meta, partition_by, precommit, folds)
+
+
+def _load(
+    spark: SparkSession, path: str, version: int | None, *kinds: str
+) -> tuple[list[DataFrame], dict]:
+    """THE loader: the committed (or pinned) version's parts, in the
+    table's part order, and its ``config`` meta keys. A version of any
+    kind but ``kinds`` is refused, named by the first kind's noun."""
+    parts, meta = load_artifact(spark, path, version)
+    if meta.get("kind") not in kinds:
+        raise ValueError(
+            f"not a {_KINDS[kinds[0]].noun} artifact: {path} "
+            f"({meta.get('kind')})"
+        )
+    k = _KINDS[meta["kind"]]
+    return [parts[p] for p in k.parts], {c: meta.get(c) for c in k.config}
+
+
+def _buckets(n_term_buckets: int) -> Column:
+    """The stable term-hash bucket of a BM25 posting: ``bm25_topk``
+    prunes with the same expression."""
+    return F.pmod(F.xxhash64("term"), F.lit(int(n_term_buckets))).cast("int")
+
+
+# ------------------------------------------------------ append-log form
 
 
 def _read_log(
@@ -353,21 +465,22 @@ def _read_log(
             raise ValueError(
                 f"not a {'/'.join(kinds)} log: {p} ({ms[-1].get('kind')})"
             )
-        kind = _LOG_KINDS[ms[-1]["kind"]]
+        kind = _KINDS[ms[-1]["kind"]]
         for v, m in zip(vs, ms):
             got = {k: m.get(k) for k in kind.agree}
             want = want or got
             if got != want:
                 raise ValueError(
                     f"version {v} of {p} was written with {got}, expected "
-                    f"{want} — a mixed-{kind.noun} log cannot be read"
+                    f"{want} — a mixed-{kind.mixed or kind.noun} log "
+                    "cannot be read"
                 )
         metas += ms
-        files += [os.path.join(p, f"v={v}", kind.part) for v in vs]
+        files += [os.path.join(p, f"v={v}", kind.parts[0]) for v in vs]
     meta = reduce(kind.combine, metas, {})
     if spark is None:
         return None, meta, vs
-    if kind.partitioned:
+    if kind.partition is not None:
         # a multi-path read of directory-PARTITIONED roots fails partition
         # inference (CONFLICTING_DIRECTORY_STRUCTURES); the partition
         # filter pushes into every branch and compaction bounds them
@@ -411,8 +524,9 @@ def fold_artifact_log(
     name = os.path.basename(os.path.normpath(path))
 
     def write(inputs: list[int], folds: list[int]) -> int:
-        rows, meta, _ = _read_log(spark, [path], tuple(_LOG_KINDS), inputs)
-        if _LOG_KINDS[meta["kind"]].distinct:
+        logs = tuple(k for k, row in _KINDS.items() if row.agree)
+        rows, meta, _ = _read_log(spark, [path], logs, inputs)
+        if _KINDS[meta["kind"]].distinct:
             rows = rows.distinct()
         meta.pop("parts", None)
         meta.setdefault("family", _artifact_family(name, meta))
@@ -434,40 +548,20 @@ def compact_artifact_log(spark: SparkSession, path: str) -> int:
 def _save_log_version(
     path: str, rows: DataFrame, meta: dict, folds: list[int], precommit
 ) -> int:
-    """Write a folded log version through its kind's saver. The saver
-    is looked up by name at call time, so a replaced module attribute
-    (a fault injected into ``save_bm25_postings``, say) is the one
-    called."""
-    def rest(*own: str) -> dict:
-        return {k: v for k, v in meta.items() if k not in own}
-
-    if meta["kind"] == "bm25_postings":
-        return save_bm25_postings(
-            rows, path, id_col=meta["id_col"],
-            n_term_buckets=meta["n_term_buckets"], stats=meta["stats"],
-            corpus_digest=meta["corpus_digest"],
-            extra_meta=rest(
-                "kind", "id_col", "n_term_buckets", "stats", "corpus_digest"
-            ),
-            precommit=precommit, folds=folds,
-        )
-    if meta["kind"] == "ivf_vectors":
-        return save_ivf_delta(
-            rows, path, id_col=meta["id_col"], vec_col=meta["vec_col"],
-            cell_col=meta["cell_col"],
-            codebook_digest=meta["codebook_digest"],
-            cell_stats=meta["cell_stats"],
-            corpus_digest=meta["corpus_digest"],
-            extra_meta=rest(
-                "kind", "id_col", "vec_col", "cell_col", "codebook_digest",
-                "n_vectors", "cell_stats", "corpus_digest",
-            ),
-            precommit=precommit, folds=folds,
-        )
-    part = _LOG_KINDS[meta["kind"]].part
-    return save_artifact(
-        path, {part: rows}, meta, precommit=precommit, folds=folds
-    )
+    """Write a folded log version through its kind's public saver, if
+    it names one, else through :func:`_save` (the fingerprint and
+    MinHash folds skip their savers' repartition). The saver is looked
+    up by name at call time, so a replaced module attribute (a fault
+    injected into ``save_bm25_postings``, say) is the one called."""
+    kind = _KINDS[meta["kind"]]
+    config = {k: meta.get(k) for k in kind.config}
+    common = {
+        "corpus_digest": meta.get("corpus_digest"), "extra_meta": meta,
+        "precommit": precommit, "folds": folds,
+    }
+    if kind.saver:
+        return globals()[kind.saver](rows, path, **config, **common)
+    return _save(meta["kind"], path, (rows,), **common, **config)
 
 
 def load_fingerprint_log(spark: SparkSession, path: str) -> DataFrame:
@@ -681,7 +775,7 @@ def is_current(path: str, digest: str, version: int | None = None) -> bool:
 # ------------------------------------------------------- numpy <-> frame
 
 
-def _matrix_frame(spark: SparkSession, name: str, mat: np.ndarray) -> DataFrame:
+def _matrix_frame(spark: SparkSession, mat: np.ndarray) -> DataFrame:
     """A matrix as (row_idx, row array<double>) — exact double round trip,
     row order recoverable by sort regardless of file/partition layout."""
     m = np.asarray(mat, dtype=np.float64)
@@ -721,26 +815,13 @@ def save_bm25_index(
     The bucket count travels in meta; ``bm25_topk`` prunes with the
     SAME hash expression, so a probe against a mismatched layout is
     impossible by construction (the column is simply absent)."""
-    meta = {
-        "kind": "bm25",
-        "id_col": id_col,
-        "k1": k1,
-        "b": b,
-        "corpus_digest": corpus_digest,
-    }
-    if n_term_buckets is None:
-        return save_artifact(path, {"weights": weights}, meta)
-    bucketed = weights.withColumn(
-        "_tb",
-        F.pmod(F.xxhash64("term"), F.lit(int(n_term_buckets))).cast("int"),
-    ).repartition(F.col("_tb"))  # ~one file per bucket directory, not
-    # one per upstream partition — the probe's cost is files opened
-    meta["n_term_buckets"] = int(n_term_buckets)
-    return save_artifact(
-        path,
-        {"weights": bucketed},
-        meta,
-        partition_by={"weights": ["_tb"]},
+    bucketed = {}
+    if n_term_buckets is not None:
+        weights = weights.withColumn("_tb", _buckets(n_term_buckets))
+        bucketed["n_term_buckets"] = int(n_term_buckets)
+    return _save(
+        "bm25", path, (weights,), corpus_digest,
+        id_col=id_col, k1=k1, b=b, **bucketed,
     )
 
 
@@ -753,11 +834,8 @@ def load_bm25_index(
     buckets with the writer's hash and push a partition filter; a frame
     without the attribute (or the ``_tb`` column) simply probes
     unpruned, so the fast path degrades safely, never wrongly."""
-    parts, meta = load_artifact(spark, path, version)
-    if meta.get("kind") != "bm25":
-        raise ValueError(f"not a bm25 artifact: {path} ({meta.get('kind')})")
-    w = parts["weights"]
-    w._bm25_n_term_buckets = meta.get("n_term_buckets")
+    (w,), config = _load(spark, path, version, "bm25")
+    w._bm25_n_term_buckets = config["n_term_buckets"]
     return w
 
 
@@ -804,51 +882,18 @@ def save_bm25_postings(
     the probe partition-prunes the union scan to the query terms'
     buckets. The bucket count is pinned by the FIRST version; appending
     with a different count is refused at load time."""
-    if stats is None or not {"n_docs", "n_tok_docs", "sum_dl"} <= set(stats):
+    if stats is None or not set(_BM25_STATS) <= set(stats):
         raise ValueError(
             "save_bm25_postings: stats must carry n_docs, n_tok_docs, "
             "sum_dl (use text.bm25_postings_with_stats)"
         )
     if "_tb" not in postings.columns:
-        postings = postings.withColumn(
-            "_tb",
-            F.pmod(F.xxhash64("term"), F.lit(int(n_term_buckets))).cast(
-                "int"
-            ),
-        )
-    meta = {
-        "kind": "bm25_postings",
-        "id_col": id_col,
-        "n_term_buckets": int(n_term_buckets),
-        "stats": {
-            "n_docs": int(stats["n_docs"]),
-            "n_tok_docs": int(stats["n_tok_docs"]),
-            "sum_dl": int(stats["sum_dl"]),
-        },
-        "corpus_digest": corpus_digest,
-        **(extra_meta or {}),
-    }
-    if int(stats["n_tok_docs"]) == 0:
-        # a zero-posting delta (full-dup tick, token-less batch) still
-        # needs its version: the meta carries the tick marker and the
-        # scalar n_docs. A partitionBy write of zero rows emits NO
-        # schema-bearing file, so write it flat — the reader's
-        # unionByName aligns it, and an empty scan prunes trivially.
-        return save_artifact(
-            path,
-            {"postings": postings.coalesce(1)},
-            meta,
-            precommit=precommit,
-            folds=folds,
-        )
-    return save_artifact(
-        path,
-        # ~one file per bucket directory, not one per upstream partition
-        {"postings": postings.repartition(F.col("_tb"))},
-        meta,
-        partition_by={"postings": ["_tb"]},
-        precommit=precommit,
-        folds=folds,
+        postings = postings.withColumn("_tb", _buckets(n_term_buckets))
+    stats = {k: int(stats[k]) for k in _BM25_STATS}
+    return _save(
+        "bm25_postings", path, (postings,), corpus_digest, extra_meta,
+        precommit, folds, n_rows=stats["n_tok_docs"], id_col=id_col,
+        n_term_buckets=int(n_term_buckets), stats=stats,
     )
 
 
@@ -934,39 +979,13 @@ def save_ivf_delta(
                 "similarity.ivf_assign_cells_with_stats and pass its "
                 "stats"
             )
-    n_rows = sum(int(s[1]) for s in (cell_stats or []))
-    meta = {
-        "kind": "ivf_vectors",
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "cell_col": cell_col,
-        "codebook_digest": codebook_digest,
-        "n_vectors": n_rows,
-        "cell_stats": [
-            [int(c), int(n), float(q)] for c, n, q in (cell_stats or [])
-        ],
-        "corpus_digest": corpus_digest,
-        **(extra_meta or {}),
-    }
-    if n_rows == 0:
-        # a zero-vector delta (full-dup tick, all-NULL vec batch) still
-        # needs its version for the tick marker; a partitionBy write of
-        # zero rows emits no schema-bearing file, so write it flat
-        return save_artifact(
-            path,
-            {"vectors": vectors.coalesce(1)},
-            meta,
-            precommit=precommit,
-            folds=folds,
-        )
-    return save_artifact(
-        path,
-        # ~one file per cell directory, not one per upstream partition
-        {"vectors": vectors.repartition(F.col(cell_col))},
-        meta,
-        partition_by={"vectors": [cell_col]},
-        precommit=precommit,
-        folds=folds,
+    cell_stats = [[int(c), int(n), float(q)] for c, n, q in cell_stats or ()]
+    n_rows = sum(n for _, n, _ in cell_stats)
+    return _save(
+        "ivf_vectors", path, (vectors,), corpus_digest, extra_meta,
+        precommit, folds, n_rows=n_rows, id_col=id_col, vec_col=vec_col,
+        cell_col=cell_col, codebook_digest=codebook_digest,
+        n_vectors=n_rows, cell_stats=cell_stats,
     )
 
 
@@ -1045,16 +1064,9 @@ def save_pca_model(
         )],
         "eig array<double>, mean array<double>, total_var double",
     )
-    return save_artifact(
-        path,
-        {"components": _matrix_frame(spark, "components", comps),
-         "scalars": scalars},
-        {
-            "kind": "pca",
-            "k": int(comps.shape[0]),
-            "dim": int(comps.shape[1]),
-            "corpus_digest": corpus_digest,
-        },
+    return _save(
+        "pca", path, (_matrix_frame(spark, comps), scalars), corpus_digest,
+        k=int(comps.shape[0]), dim=int(comps.shape[1]),
     )
 
 
@@ -1063,13 +1075,10 @@ def load_pca_model(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
     """Reload ``(components, explained_variance, mean, total_variance)``
     — plugs straight into ``pca_transform`` / ``pca_topk(fitted=...)``."""
-    parts, meta = load_artifact(spark, path, version)
-    if meta.get("kind") != "pca":
-        raise ValueError(f"not a pca artifact: {path} ({meta.get('kind')})")
-    comps = _frame_matrix(parts["components"])
-    row = parts["scalars"].first()
+    (comps, scalars), _ = _load(spark, path, version, "pca")
+    row = scalars.first()
     return (
-        comps,
+        _frame_matrix(comps),
         np.array(row["eig"], dtype=np.float64),
         np.array(row["mean"], dtype=np.float64),
         float(row["total_var"]),
@@ -1096,30 +1105,20 @@ def save_centroids(
     the meta, so any later session can run the documented refit trigger
     (``ivf_needs_refit``) against the healthy reference without
     refitting or rescanning the original corpus."""
-    meta = {
-        "kind": kind,
-        "k": int(np.asarray(centroids).shape[0]),
-        "dim": int(np.asarray(centroids).shape[1]),
-        "corpus_digest": corpus_digest,
-    }
     if fit_stats is not None:
-        meta["fit_stats"] = {k: v for k, v in fit_stats.items()}
-    if extra_meta:
-        meta.update(extra_meta)
-    return save_artifact(
-        path,
-        {"centroids": _matrix_frame(spark, "centroids", centroids)},
-        meta,
+        extra_meta = {"fit_stats": dict(fit_stats), **(extra_meta or {})}
+    k, dim = np.asarray(centroids).shape
+    return _save(
+        kind, path, (_matrix_frame(spark, centroids),), corpus_digest,
+        extra_meta, k=int(k), dim=int(dim),
     )
 
 
 def load_centroids(
     spark: SparkSession, path: str, version: int | None = None
 ) -> np.ndarray:
-    parts, meta = load_artifact(spark, path, version)
-    if meta.get("kind") not in ("centroids", "ivf", "kmeans"):
-        raise ValueError(f"not a centroid artifact: {path} ({meta.get('kind')})")
-    return _frame_matrix(parts["centroids"])
+    (cents,), _ = _load(spark, path, version, "centroids", "ivf", "kmeans")
+    return _frame_matrix(cents)
 
 
 def save_pq_codebooks(
@@ -1136,29 +1135,17 @@ def save_pq_codebooks(
     contract as the cell layout vs its centroids)."""
     b = np.asarray(books, dtype=np.float64)
     m, ksub, ds = b.shape
-    return save_artifact(
-        path,
-        {"books": _matrix_frame(spark, "books", b.reshape(m * ksub, ds))},
-        {
-            "kind": "pq_codebooks",
-            "m": int(m),
-            "ksub": int(ksub),
-            "dsub": int(ds),
-            "corpus_digest": corpus_digest,
-        },
+    return _save(
+        "pq_codebooks", path, (_matrix_frame(spark, b.reshape(m * ksub, ds)),),
+        corpus_digest, m=int(m), ksub=int(ksub), dsub=int(ds),
     )
 
 
 def load_pq_codebooks(
     spark: SparkSession, path: str, version: int | None = None
 ) -> np.ndarray:
-    parts, meta = load_artifact(spark, path, version)
-    if meta.get("kind") != "pq_codebooks":
-        raise ValueError(
-            f"not a PQ codebook artifact: {path} ({meta.get('kind')})"
-        )
-    flat = _frame_matrix(parts["books"])
-    return flat.reshape(meta["m"], meta["ksub"], meta["dsub"])
+    (books,), c = _load(spark, path, version, "pq_codebooks")
+    return _frame_matrix(books).reshape(c["m"], c["ksub"], c["dsub"])
 
 
 # ------------------------------------------- dedup / decontamination
@@ -1179,26 +1166,17 @@ def save_fingerprint_index(
     smaller than the corpus, written once, re-read per batch/stream.
     Rows are repartitioned by the fingerprint before writing so any
     later bucketed/clustered probe layout can build on stable files."""
-    return save_artifact(
-        path,
-        {"fps": fps.repartition(F.col(fp_col))},
-        {
-            "kind": "fingerprints",
-            "fp_col": fp_col,
-            "corpus_digest": corpus_digest,
-            **(extra_meta or {}),
-        },
-        precommit=precommit,
+    return _save(
+        "fingerprints", path, (fps.repartition(F.col(fp_col)),),
+        corpus_digest, extra_meta, precommit, fp_col=fp_col,
     )
 
 
 def load_fingerprint_index(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
-    parts, meta = load_artifact(spark, path, version)
-    if meta.get("kind") != "fingerprints":
-        raise ValueError(f"not a fingerprint artifact: {path} ({meta.get('kind')})")
-    return parts["fps"]
+    (fps,), _ = _load(spark, path, version, "fingerprints")
+    return fps
 
 
 def save_bpe_model(
@@ -1216,11 +1194,7 @@ def save_bpe_model(
     """
     rows = [(i, a, b) for i, (a, b) in enumerate(merges)]
     frame = spark.createDataFrame(rows, "rank int, a string, b string")
-    return save_artifact(
-        path,
-        {"merges": frame},
-        {"kind": "bpe", "n_merges": len(rows), "corpus_digest": corpus_digest},
-    )
+    return _save("bpe", path, (frame,), corpus_digest, n_merges=len(rows))
 
 
 def save_unigram_model(
@@ -1236,24 +1210,16 @@ def save_unigram_model(
     session — the same fit-once contract as the BPE artifact."""
     rows = [(p_, float(lp)) for p_, lp in pieces]
     frame = spark.createDataFrame(rows, "piece string, logprob double")
-    return save_artifact(
-        path,
-        {"pieces": frame},
-        {
-            "kind": "unigram",
-            "vocab_size": len(rows),
-            "corpus_digest": corpus_digest,
-        },
+    return _save(
+        "unigram", path, (frame,), corpus_digest, vocab_size=len(rows)
     )
 
 
 def load_unigram_model(
     spark: SparkSession, path: str, version: int | None = None
 ) -> list[tuple[str, float]]:
-    parts, meta = load_artifact(spark, path, version)
-    if meta.get("kind") != "unigram":
-        raise ValueError(f"not a unigram artifact: {path} ({meta.get('kind')})")
-    rows = parts["pieces"].orderBy(F.col("logprob").desc(), "piece").collect()
+    (pieces,), _ = _load(spark, path, version, "unigram")
+    rows = pieces.orderBy(F.col("logprob").desc(), "piece").collect()
     return [(r["piece"], r["logprob"]) for r in rows]
 
 
@@ -1262,10 +1228,8 @@ def load_bpe_model(
 ) -> list[tuple[str, str]]:
     """Reload the ordered merge list — plugs straight into
     ``operators.bpe.bpe_tokenize(merges=...)``."""
-    parts, meta = load_artifact(spark, path, version)
-    if meta.get("kind") != "bpe":
-        raise ValueError(f"not a bpe artifact: {path} ({meta.get('kind')})")
-    rows = parts["merges"].orderBy("rank").collect()
+    (merges,), _ = _load(spark, path, version, "bpe")
+    rows = merges.orderBy("rank").collect()
     return [(r["a"], r["b"]) for r in rows]
 
 
@@ -1287,18 +1251,10 @@ def save_minhash_index(
     engine's ``xxhash64(shingle, i)`` scheme), so loaders get it back
     and must feed it to the probe side — ``decontaminate_stream_fuzzy``
     does this automatically."""
-    return save_artifact(
-        path,
-        {"bands": band_index},
-        {
-            "kind": "minhash_bands",
-            "num_hashes": int(num_hashes),
-            "bands": int(bands),
-            "shingle_k": int(shingle_k),
-            "corpus_digest": corpus_digest,
-            **(extra_meta or {}),
-        },
-        precommit=precommit,
+    return _save(
+        "minhash_bands", path, (band_index,), corpus_digest, extra_meta,
+        precommit, num_hashes=int(num_hashes), bands=int(bands),
+        shingle_k=int(shingle_k),
     )
 
 
@@ -1319,19 +1275,10 @@ def save_minhash_doc_index(
     (``minhash_band_probe_verified`` / ``decontaminate_stream_verified``).
     ``jaccard_threshold`` rides along as the operating threshold the
     index was intended for (informational; probes may override)."""
-    return save_artifact(
-        path,
-        {"bands": doc_index},
-        {
-            "kind": "minhash_docs",
-            "num_hashes": int(num_hashes),
-            "bands": int(bands),
-            "shingle_k": int(shingle_k),
-            "jaccard_threshold": jaccard_threshold,
-            "corpus_digest": corpus_digest,
-            **(extra_meta or {}),
-        },
-        precommit=precommit,
+    return _save(
+        "minhash_docs", path, (doc_index,), corpus_digest, extra_meta,
+        precommit, num_hashes=int(num_hashes), bands=int(bands),
+        shingle_k=int(shingle_k), jaccard_threshold=jaccard_threshold,
     )
 
 
@@ -1339,17 +1286,8 @@ def load_minhash_doc_index(
     spark: SparkSession, path: str, version: int | None = None
 ) -> tuple[DataFrame, dict]:
     """Reload ``(doc_index, config)`` for the verified probe side."""
-    parts, meta = load_artifact(spark, path, version)
-    if meta.get("kind") != "minhash_docs":
-        raise ValueError(
-            f"not a minhash doc-index artifact: {path} ({meta.get('kind')})"
-        )
-    return parts["bands"], {
-        "num_hashes": meta["num_hashes"],
-        "bands": meta["bands"],
-        "shingle_k": meta["shingle_k"],
-        "jaccard_threshold": meta.get("jaccard_threshold"),
-    }
+    (bands,), config = _load(spark, path, version, "minhash_docs")
+    return bands, config
 
 
 def save_dsir_model(
@@ -1367,16 +1305,9 @@ def save_dsir_model(
     pass only lands grams in the right buckets with identical
     ``n_buckets``/``salt``, so loaders get it back and must feed it to
     ``dsir_score``."""
-    return save_artifact(
-        path,
-        {"ratio": ratio},
-        {
-            "kind": "dsir_ratio",
-            "n_buckets": int(n_buckets),
-            "alpha": float(alpha),
-            "salt": salt,
-            "corpus_digest": corpus_digest,
-        },
+    return _save(
+        "dsir_ratio", path, (ratio,), corpus_digest,
+        n_buckets=int(n_buckets), alpha=float(alpha), salt=salt,
     )
 
 
@@ -1384,14 +1315,8 @@ def load_dsir_model(
     spark: SparkSession, path: str, version: int | None = None
 ) -> tuple[DataFrame, dict]:
     """Reload ``(ratio, config)`` for fresh-session DSIR scoring."""
-    parts, meta = load_artifact(spark, path, version)
-    if meta.get("kind") != "dsir_ratio":
-        raise ValueError(f"not a dsir artifact: {path} ({meta.get('kind')})")
-    return parts["ratio"], {
-        "n_buckets": meta["n_buckets"],
-        "alpha": meta["alpha"],
-        "salt": meta["salt"],
-    }
+    (ratio,), config = _load(spark, path, version, "dsir_ratio")
+    return ratio, config
 
 
 def load_minhash_index(
@@ -1399,11 +1324,5 @@ def load_minhash_index(
 ) -> tuple[DataFrame, dict]:
     """Reload ``(band_index, config)`` — config carries ``num_hashes``,
     ``bands``, ``shingle_k`` for the probe side."""
-    parts, meta = load_artifact(spark, path, version)
-    if meta.get("kind") != "minhash_bands":
-        raise ValueError(f"not a minhash artifact: {path} ({meta.get('kind')})")
-    return parts["bands"], {
-        "num_hashes": meta["num_hashes"],
-        "bands": meta["bands"],
-        "shingle_k": meta["shingle_k"],
-    }
+    (bands,), config = _load(spark, path, version, "minhash_bands")
+    return bands, config

@@ -5,7 +5,9 @@ crash-window tests in ``test_artifacts.py`` and
 Each case names the log directory the fold rewrites, runs one fold on
 an ingest root, and reads the content the fold must preserve — so a
 crash anywhere between the fold's commit and its deletes can be checked
-for exactly-once content, whoever folds. The root is bootstrapped once
+for exactly-once content, whoever folds. A case whose fold writes
+through a public saver of ``sources.artifacts`` names it, so a fault
+injected there can be checked to reach the fold. The root is bootstrapped once
 per test module (``fold_root`` in ``conftest.py``): a corpus with
 vectors, the BM25 and IVF logs on, and one tick, so every log holds two
 versions."""
@@ -104,6 +106,7 @@ class FoldCase:
     log: str
     fold: Callable
     content: Callable
+    saver: str | None = None
 
 
 CASES = {
@@ -134,6 +137,7 @@ CASES = {
             spark, os.path.join(root, "bm25")
         ),
         _bm25,
+        "save_bm25_postings",
     ),
     "ivf_compaction": FoldCase(
         "ivf",
@@ -141,6 +145,7 @@ CASES = {
             spark, os.path.join(root, "ivf")
         ),
         _vectors,
+        "save_ivf_delta",
     ),
     "ivf_refit": FoldCase(
         "ivf",
@@ -148,6 +153,9 @@ CASES = {
             spark, root, sample_rows=300, n_iter=4
         ),
         _vectors,
+        "save_ivf_delta",
     ),
-    "retirement_refold": FoldCase("bm25", _retire_refold, _kept_postings),
+    "retirement_refold": FoldCase(
+        "bm25", _retire_refold, _kept_postings, "save_bm25_postings"
+    ),
 }

@@ -33,6 +33,15 @@ def test_save_load_roundtrip_and_meta(spark, tmp_path):
     assert sorted(r["y"] for r in parts["main"].collect()) == [
         2 * i for i in range(10)
     ]
+    import inspect
+
+    public = {
+        n for n, v in vars(art).items()
+        if not n.startswith("_")
+        and (inspect.isfunction(v) or inspect.isclass(v))
+        and v.__module__ == art.__name__
+    }
+    assert sorted(art.__all__) == sorted(public)
 
 
 def test_versions_bump_and_pin(spark, tmp_path):
@@ -179,6 +188,254 @@ def test_corpus_digest_order_independent(spark, tmp_path):
 
 
 # -------------------------------------------------- typed model artifacts
+
+
+_POSTINGS = "doc_id long, term string, tf int, dl int"
+_VECTORS = "doc_id long, embedding array<double>, ivf_cell int"
+_BANDING = {"num_hashes": 8, "bands": 4, "shingle_k": 5}
+
+
+def _df(s, rows, schema):
+    return s.createDataFrame(rows, schema)
+
+
+def _plain(x):
+    """A loaded value as plain Python: frames as sorted row tuples."""
+    if isinstance(x, (tuple, list)):
+        return type(x)(_plain(v) for v in x)
+    if isinstance(x, np.ndarray):
+        return x.tolist()
+    if hasattr(x, "collect"):
+        return sorted(map(tuple, x.collect()))
+    return x
+
+
+# kind -> (save(spark, path), load(spark, path), the loaded value, the
+# saved version's parsed _META.json, another kind's loader, its noun)
+_KIND_CASES = {
+    "bm25": (
+        lambda s, p: art.save_bm25_index(
+            _df(s, [(1, "a", 0.5), (2, "c", 0.25)],
+                "doc_id long, term string, w double"),
+            p, corpus_digest="d:1", n_term_buckets=4,
+        ),
+        lambda s, p: art.load_bm25_index(s, p).select("doc_id", "term", "w"),
+        [(1, "a", 0.5), (2, "c", 0.25)],
+        {
+            "parts": ["weights"], "kind": "bm25", "id_col": "doc_id",
+            "k1": 1.2, "b": 0.75, "corpus_digest": "d:1", "n_term_buckets": 4,
+        },
+        art.load_pca_model, "pca",
+    ),
+    "pca": (
+        lambda s, p: art.save_pca_model(
+            s, p, np.eye(2), np.array([2.0, 1.0]), np.array([0.5, 0.25]),
+            3.0, corpus_digest="d:1",
+        ),
+        art.load_pca_model,
+        ([[1.0, 0.0], [0.0, 1.0]], [2.0, 1.0], [0.5, 0.25], 3.0),
+        {
+            "parts": ["components", "scalars"], "kind": "pca", "k": 2,
+            "dim": 2, "corpus_digest": "d:1",
+        },
+        art.load_centroids, "centroid",
+    ),
+    "centroids": (
+        lambda s, p: art.save_centroids(
+            s, p, np.array([[1.0, 2.0], [3.0, 4.0]]), corpus_digest="d:1"
+        ),
+        art.load_centroids,
+        [[1.0, 2.0], [3.0, 4.0]],
+        {
+            "parts": ["centroids"], "kind": "centroids", "k": 2, "dim": 2,
+            "corpus_digest": "d:1",
+        },
+        art.load_pq_codebooks, "PQ codebook",
+    ),
+    "ivf": (
+        lambda s, p: art.save_centroids(
+            s, p, np.array([[1.0, 2.0]]), corpus_digest="d:1", kind="ivf",
+            fit_stats={"a": 1}, extra_meta={"codebook_digest": "cb"},
+        ),
+        art.load_centroids,
+        [[1.0, 2.0]],
+        {
+            "parts": ["centroids"], "kind": "ivf", "k": 1, "dim": 2,
+            "corpus_digest": "d:1", "fit_stats": {"a": 1},
+            "codebook_digest": "cb",
+        },
+        art.load_fingerprint_index, "fingerprint",
+    ),
+    "pq_codebooks": (
+        lambda s, p: art.save_pq_codebooks(
+            s, p, np.arange(12.0).reshape(2, 3, 2), corpus_digest="d:1"
+        ),
+        art.load_pq_codebooks,
+        np.arange(12.0).reshape(2, 3, 2).tolist(),
+        {
+            "parts": ["books"], "kind": "pq_codebooks", "m": 2, "ksub": 3,
+            "dsub": 2, "corpus_digest": "d:1",
+        },
+        art.load_bpe_model, "bpe",
+    ),
+    "fingerprints": (
+        lambda s, p: art.save_fingerprint_index(
+            _df(s, [("f1",), ("f2",)], "fp string"), p,
+            corpus_digest="d:1", extra_meta={"batch_digest": "b"},
+        ),
+        art.load_fingerprint_index,
+        [("f1",), ("f2",)],
+        {
+            "parts": ["fps"], "kind": "fingerprints", "fp_col": "fp",
+            "corpus_digest": "d:1", "batch_digest": "b",
+        },
+        art.load_unigram_model, "unigram",
+    ),
+    "bpe": (
+        lambda s, p: art.save_bpe_model(
+            s, p, [("a", "b"), ("ab", "c")], corpus_digest="d:1"
+        ),
+        art.load_bpe_model,
+        [("a", "b"), ("ab", "c")],
+        {
+            "parts": ["merges"], "kind": "bpe", "n_merges": 2,
+            "corpus_digest": "d:1",
+        },
+        art.load_minhash_index, "minhash",
+    ),
+    "unigram": (
+        lambda s, p: art.save_unigram_model(
+            s, p, [("a", -1.0), ("b", -2.0)], corpus_digest="d:1"
+        ),
+        art.load_unigram_model,
+        [("a", -1.0), ("b", -2.0)],
+        {
+            "parts": ["pieces"], "kind": "unigram", "vocab_size": 2,
+            "corpus_digest": "d:1",
+        },
+        art.load_minhash_doc_index, "minhash doc-index",
+    ),
+    "minhash_bands": (
+        lambda s, p: art.save_minhash_index(
+            _df(s, [(0, 11), (1, 12)], "band int, bucket long"), p,
+            **_BANDING, corpus_digest="d:1",
+        ),
+        art.load_minhash_index,
+        ([(0, 11), (1, 12)], _BANDING),
+        {
+            "parts": ["bands"], "kind": "minhash_bands", "num_hashes": 8,
+            "bands": 4, "shingle_k": 5, "corpus_digest": "d:1",
+        },
+        art.load_dsir_model, "dsir",
+    ),
+    "minhash_docs": (
+        lambda s, p: art.save_minhash_doc_index(
+            _df(s, [(0, 11, 7)], "band int, bucket long, corpus_id long"),
+            p, **_BANDING, jaccard_threshold=0.7, corpus_digest="d:1",
+        ),
+        art.load_minhash_doc_index,
+        ([(0, 11, 7)], {**_BANDING, "jaccard_threshold": 0.7}),
+        {
+            "parts": ["bands"], "kind": "minhash_docs", "num_hashes": 8,
+            "bands": 4, "shingle_k": 5, "jaccard_threshold": 0.7,
+            "corpus_digest": "d:1",
+        },
+        art.load_bm25_index, "bm25",
+    ),
+    "dsir_ratio": (
+        lambda s, p: art.save_dsir_model(
+            _df(s, [(1, 0.5)], "bucket long, _lr double"), p, 16, 0.1, "s",
+            corpus_digest="d:1",
+        ),
+        art.load_dsir_model,
+        ([(1, 0.5)], {"n_buckets": 16, "alpha": 0.1, "salt": "s"}),
+        {
+            "parts": ["ratio"], "kind": "dsir_ratio", "n_buckets": 16,
+            "alpha": 0.1, "salt": "s", "corpus_digest": "d:1",
+        },
+        art.load_pca_model, "pca",
+    ),
+    "bm25_postings": (
+        lambda s, p: art.save_bm25_postings(
+            _df(s, [(1, "a", 2, 3), (1, "b", 1, 3), (2, "c", 1, 1)],
+                _POSTINGS),
+            p, n_term_buckets=4,
+            stats={"n_docs": 3, "n_tok_docs": 2, "sum_dl": 4},
+            corpus_digest="d:1", extra_meta={"batch_digest": "b"},
+        ),
+        lambda s, p: art.load_bm25_postings_log(s, p)[0].select(
+            "doc_id", "term", "tf", "dl"
+        ),
+        [(1, "a", 2, 3), (1, "b", 1, 3), (2, "c", 1, 1)],
+        {
+            "parts": ["postings"], "kind": "bm25_postings", "id_col": "doc_id",
+            "n_term_buckets": 4,
+            "stats": {"n_docs": 3, "n_tok_docs": 2, "sum_dl": 4},
+            "corpus_digest": "d:1", "batch_digest": "b",
+        },
+        art.load_bm25_index, "bm25",
+    ),
+    "ivf_vectors": (
+        lambda s, p: art.save_ivf_delta(
+            _df(s, [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 1)], _VECTORS), p,
+            codebook_digest="cb", cell_stats=[[0, 1, 0.25], [1, 1, 0.5]],
+            corpus_digest="d:1", extra_meta={"n_null_vec": 2},
+        ),
+        lambda s, p: art.load_ivf_log(s, p)[0].select(
+            "doc_id", "embedding", "ivf_cell"
+        ),
+        [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 1)],
+        {
+            "parts": ["vectors"], "kind": "ivf_vectors", "id_col": "doc_id",
+            "vec_col": "embedding", "cell_col": "ivf_cell",
+            "codebook_digest": "cb", "n_vectors": 2,
+            "cell_stats": [[0, 1, 0.25], [1, 1, 0.5]], "corpus_digest": "d:1",
+            "n_null_vec": 2,
+        },
+        art.load_centroids, "centroid",
+    ),
+}
+# log kinds: a zero-row delta, its part and partition directory prefix
+_EMPTY_DELTAS = {
+    "bm25_postings": (
+        lambda s, p: art.save_bm25_postings(
+            _df(s, [], _POSTINGS), p, n_term_buckets=4,
+            stats={"n_docs": 1, "n_tok_docs": 0, "sum_dl": 0},
+        ),
+        "postings", "_tb=",
+    ),
+    "ivf_vectors": (
+        lambda s, p: art.save_ivf_delta(
+            _df(s, [], _VECTORS), p, codebook_digest="cb", cell_stats=[]
+        ),
+        "vectors", "ivf_cell=",
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_KIND_CASES))
+def test_every_kind_roundtrip_meta_and_refusal(spark, tmp_path, kind):
+    """Every artifact kind saves and loads back what was saved, with the
+    meta pinned key for key, and another kind's loader refuses it. A
+    log's zero-row delta lands flat, a non-empty one partitioned."""
+    import json
+
+    save, load, want, meta, refuse, noun = _KIND_CASES[kind]
+    p = str(tmp_path / kind)
+    assert save(spark, p) == 1
+    assert _plain(load(spark, p)) == want
+    with open(os.path.join(p, "v=1", "_META.json")) as f:
+        assert json.load(f) == meta
+    with pytest.raises(ValueError, match=f"not a {noun} artifact"):
+        refuse(spark, p)
+    if kind in _EMPTY_DELTAS:
+        save_empty, part, prefix = _EMPTY_DELTAS[kind]
+        assert save_empty(spark, p) == 2
+        for v, partitioned in ((1, True), (2, False)):
+            names = os.listdir(os.path.join(p, f"v={v}", part))
+            assert any(n.startswith(prefix) for n in names) == partitioned
+            assert any(n.endswith(".parquet") for n in names) != partitioned
+        assert _plain(load(spark, p)) == want
 
 
 def test_pca_model_bit_identical_roundtrip(spark, sf_dir, tmp_path):

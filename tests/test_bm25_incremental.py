@@ -123,6 +123,32 @@ def test_compaction_crash_before_deletes_never_double_counts(
     assert fc.content(spark, root) == want
 
 
+@pytest.mark.parametrize(
+    "case", sorted(c for c, fc in _fold_cases.CASES.items() if fc.saver)
+)
+def test_fold_writes_through_public_saver(
+    spark, fold_root, tmp_path, monkeypatch, case
+):
+    """A fold whose log has a public saver writes through it, looked up
+    on the module at call time: a fault injected there fails the fold
+    and leaves the content as it was."""
+    import shutil as _shutil
+
+    fc = _fold_cases.CASES[case]
+    root = str(tmp_path / "root")
+    _shutil.copytree(fold_root, root)
+    want = fc.content(spark, root)
+
+    def boom(*a, **k):
+        raise RuntimeError("saver")
+
+    monkeypatch.setattr(art, fc.saver, boom)
+    with pytest.raises(RuntimeError, match="saver"):
+        fc.fold(spark, root)
+    monkeypatch.undo()
+    assert fc.content(spark, root) == want
+
+
 def test_mixed_bucket_layout_refused(spark, sf_dir, tmp_path):
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     path = str(tmp_path / "bm25p")

@@ -11,7 +11,11 @@ final because the driver records only the last bytes of stdout
 mid-JSON); a consumer should parse the LAST parseable line.
 
 Each query is materialized with the no-op writer (full execution, no
-collect-to-driver cost in the measurement).
+collect-to-driver cost in the measurement). The diagnostics line also
+counts the generated classes compiled (``codegen_compiles``): per query
+over its steady runs, and over one untimed second pass of the headline
+set after the timed runs, the pass that shows a codegen class cache too
+small for the set.
 
 Dual-total convention (keep in every future round's artifact): ``value``
 sums the FULL current headline set (forward-going number), while
@@ -70,7 +74,7 @@ def _java_procs() -> dict[int, str]:
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
-from data_engineering_capstone_project__spark.session import get_spark
+from data_engineering_capstone_project__spark.session import codegen_compiles, get_spark
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -265,15 +269,21 @@ def main() -> None:
     ).save()
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "4"))
 
-    def _measure_one(fn) -> tuple[float, float]:
+    def _measure_one(fn) -> tuple[float, float, int]:
+        """Median and spread of the steady runs, and the classes they
+        compiled (run 1 compiles the plan's generated code)."""
         samples: list[float] = []
-        for _ in range(n_runs):
+        compiles = 0
+        for i in range(n_runs):
+            c0 = codegen_compiles(spark)
             t0 = time.time()
             df = fn(spark, sf_dir)
             df.write.mode("overwrite").format("noop").save()
             samples.append(time.time() - t0)
+            if i:
+                compiles += codegen_compiles(spark) - c0
         steady = sorted(samples[1:]) if len(samples) > 1 else samples
-        return steady[len(steady) // 2], steady[-1] - steady[0]
+        return steady[len(steady) // 2], steady[-1] - steady[0], compiles
 
     # calibration bracket, PRE (VERDICT r12 #6 / r13 #6: two shapes;
     # frozen r1 twins since r16 — see _CAL_TWINS)
@@ -281,18 +291,17 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
+    steady_compiles: dict[str, int] = {}
     retried: list[str] = []
-    for name in HEADLINE + HEADLINE_R6 + HEADLINE_R7 + HEADLINE_R12:
+    names = HEADLINE + HEADLINE_R6 + HEADLINE_R7 + HEADLINE_R12
+    for name in names:
         fn = qs[name]
 
         # run 1 pays codegen compile + JIT for the plan shape and is
         # DISCARDED; the reported number is the median of the remaining
         # runs (steady state), with min-max spread recorded so
         # round-over-round deltas can be read against run-to-run noise
-        def measure() -> tuple[float, float]:
-            return _measure_one(fn)
-
-        med, spr = measure()
+        med, spr, compiles = _measure_one(fn)
         # a spread above ~30% of the median means the machine was
         # contended mid-measurement (VERDICT r2: a committed bench must
         # be trustworthy) — remeasure up to twice, keep the calmest
@@ -301,13 +310,21 @@ def main() -> None:
                 break
             if name not in retried:
                 retried.append(name)
-            med2, spr2 = measure()
+            med2, spr2, compiles2 = _measure_one(fn)
             if spr2 / max(med2, 1e-9) < spr / med:
-                med, spr = med2, spr2
+                med, spr, compiles = med2, spr2, compiles2
         timings[name] = round(med, 3)
         spreads[name] = round(spr, 3)
+        steady_compiles[name] = compiles
     # calibration bracket, POST (frozen r1 twins — see _CAL_TWINS)
     cal_post = {q: _measure_one(_CAL_TWINS[q])[0] for q, _ in _CALIBRATION}
+    # one untimed second pass over the whole headline set: the steady runs
+    # above reuse a query's classes at once, so only a pass after every
+    # other query shows a class the codegen cache evicted in between
+    c0 = codegen_compiles(spark)
+    for name in names:
+        qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+    second_pass_compiles = codegen_compiles(spark) - c0
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     is_sf01 = isinstance(sf_val, float) and abs(sf_val - 0.1) < 1e-9
     per_query = []
@@ -387,6 +404,13 @@ def main() -> None:
                 "headline_additions": HEADLINE_R6 + HEADLINE_R7 + HEADLINE_R12,
                 "queries": timings,
                 "spread": spreads,
+                # generated classes compiled: per query over its steady
+                # runs, and over the whole second pass (both 0 when the
+                # session's codegen cache holds its working set)
+                "codegen_compiles": {
+                    "steady_runs": steady_compiles,
+                    "second_pass": second_pass_compiles,
+                },
                 "runs_per_query": n_runs,
                 "aggregation": "median of runs 2..n (run 1 warms codegen)",
                 "respread_queries": retried,

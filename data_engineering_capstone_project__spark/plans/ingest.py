@@ -1740,6 +1740,7 @@ def _ingest_batch_impl(
     # replaces a full per-tick count job (optimization r16); the value
     # also sizes the broadcast flip below
     n_batch = art.digest_count(bdg)
+    bounded_batch = n_batch <= _PROBE_BROADCAST_MAX_FPS
 
     # ---- the tick's batch-side tables, each computed ONCE -------------
     # exact_kept (the exact tier's result) and band_rows (its banded
@@ -1754,7 +1755,7 @@ def _ingest_batch_impl(
     # batch falls back to the symmetric shuffle plan
     exact_kept = dedup.dedup_against_corpus(
         batch, text_col=text_col, id_col=id_col, corpus_fps=fp_idx,
-        bounded_batch=n_batch <= _PROBE_BROADCAST_MAX_FPS,
+        bounded_batch=bounded_batch,
     ).persist()
     # a single-row action on a tick-bounded frame: without AQE the count
     # is one job, not a cache-stage job plus a count-stage job (the
@@ -1871,6 +1872,10 @@ def _ingest_batch_impl(
     to_publish = published.withColumn(
         _ARRIVAL, F.lit(int(rnd)).cast("long")
     )
+    # a bounded tick's survivors sit in the window exchange's shuffle
+    # partitions, a few rows each: write its payload as one file
+    if bounded_batch:
+        to_publish = to_publish.coalesce(1)
     # the published docs' digest rides the payload write as an
     # Observation (no job of its own)
     observed, published_digest = art.observe_digest(to_publish, [id_col, text_col])
@@ -1933,6 +1938,10 @@ def _ingest_batch_impl(
     # or drops all rows of an id, so they equal a rebuild from the
     # payload
     pub_bands = band_rows.join(published.select(id_col), id_col, "left_semi")
+    # the verified doc index keeps band_rows' partitioning by id (its
+    # distinct needs no exchange): one file for a bounded tick, as above
+    if bounded_batch:
+        pub_bands = pub_bands.coalesce(1)
     _check_lease_generation(root, expected_gen)
     mh_v = _save_mh_delta(
         published, mh_path, cfg, verified, id_col, text_col, pub_bands,

@@ -119,21 +119,25 @@ def read_tsv_tagged(
     # way on the driver, once per file, so a row costs one map lookup: no
     # per-row regex or URL decoding, whose generated code is costly to
     # JIT-compile (a C2 compile of it took seconds and ~400 MB of native
-    # memory, at a point that varied from run to run)
+    # memory, at a point that varied from run to run). When every file
+    # maps to one value the map holds the values themselves and a row is
+    # tagged without an explode.
     hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    single = all(len(vals) == 1 for vals in files.values())
     lookup = F.create_map(
         *[
             x
             for p, vals in files.items()
             for x in (
                 F.lit("file:" + hpath(local_path(p)).toUri().getRawPath()),
-                F.array(*[F.lit(v) for v in vals]),
+                F.lit(vals[0]) if single else F.array(*[F.lit(v) for v in vals]),
             )
         ]
     )
     path = F.col("_metadata.file_path")
     unmatched = F.raise_error(F.concat(F.lit(f"no {tag} for input file "), path))
-    return df.select("*", F.explode(F.coalesce(F.element_at(lookup, path), unmatched)).alias(tag))
+    tagged = F.coalesce(F.element_at(lookup, path), unmatched)
+    return df.select("*", (tagged if single else F.explode(tagged)).alias(tag))
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

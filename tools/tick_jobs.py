@@ -26,7 +26,10 @@ repo = (
 sys.path.insert(0, repo)
 
 from data_engineering_capstone_project__spark.plans import ingest  # noqa: E402
-from data_engineering_capstone_project__spark.session import get_spark  # noqa: E402
+from data_engineering_capstone_project__spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+)
 from perfbench.gen import gen_ingest  # noqa: E402
 
 SEED = 3
@@ -49,15 +52,9 @@ def job_rows(spark, group: str) -> list[tuple[int, float, str]]:
     return rows
 
 
-def compile_count(spark) -> int:
-    """Classes compiled by whole-stage codegen so far in this JVM."""
-    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    return int(metrics.METRIC_COMPILATION_TIME().getCount())
-
-
 def run_tick(spark, batch, root: str, label: str) -> None:
     sc = spark.sparkContext
-    c0 = compile_count(spark)
+    c0 = codegen_compiles(spark)
     sc.setJobGroup(label, label)
     t0 = time.perf_counter()
     try:
@@ -69,7 +66,7 @@ def run_tick(spark, batch, root: str, label: str) -> None:
     rows = job_rows(spark, label)
     print(
         f"{label}: {dt:.2f} s, {len(rows)} jobs, "
-        f"{compile_count(spark) - c0} codegen compiles, {stats}"
+        f"{codegen_compiles(spark) - c0} codegen compiles, {stats}"
     )
     for jid, sec, site in rows:
         print(f"  job {jid:4d} {sec:6.3f} s  {site}")
